@@ -51,7 +51,10 @@ def frontier_schedule(df: DataFrame, id_col: str = "url_id",
                   F.col(prio_col).cast("long").alias("priority"),
                   F.col(delay_col).cast("long").alias("delay_ms"))
     counts = q.groupBy("host").agg(F.count("*").alias("_n"))
-    guard = counts.select(F.max("_n").alias("_mx")).select(
+    # an empty frontier is a drained queue, not an oversized one: max
+    # over zero hosts is NULL, which would fall through to raise_error
+    guard = counts.select(
+        F.coalesce(F.max("_n"), F.lit(0)).alias("_mx")).select(
         F.when(F.col("_mx") <= max_host_queue, F.lit(1))
         .otherwise(F.raise_error(F.lit(
             f"frontier_schedule: a host queue exceeds max_host_queue="

@@ -3,7 +3,7 @@
 Pipeline (north rule, SURVEY.md §3.1 "Our Spark lifecycle"):
 
     read documents (Iceberg/parquet)
-      → checkpoint anti-join against committed lineage partitions (resume)
+      → resume filter: drop rows of buckets the lineage marks committed
       → deterministic salted bucketing on xxhash64(doc_id)  [skew defusal]
       → optional intra-doc chunking for giant span arrays
       → extraction kernel (Arrow or Catalyst)
@@ -14,21 +14,30 @@ Pipeline (north rule, SURVEY.md §3.1 "Our Spark lifecycle"):
 
 Resume model: ``partition_id`` IS the deterministic bucket
 (``pmod(xxhash64(doc_id), n_buckets)``), not Spark's ephemeral task
-partition id — so a re-run computes identical bucket membership, anti-joins
-the committed bucket set (broadcast: it is at most ``n_buckets`` rows), and
+partition id — so a re-run computes identical bucket membership, drops
+the committed buckets with an ``isin`` filter over the collected lineage
+rows (one row per committed bucket, so at most ``n_buckets``), and
 processes only the remainder. On a real cluster the two writes are Iceberg
 appends (snapshot-isolated, atomic per commit); locally they are parquet
 appends with per-bucket directory layout, committed bucket-at-a-time.
-Equivalent of the reference's job registry + idempotent delete
-(/root/reference/api_server.py:233-348), done with data instead of state.
+Equivalent of the reference's job registry + idempotent delete, done with
+data instead of state.
+
+Fixed per-job cost: the bookkeeping rides the writes instead of running
+its own Spark jobs. The lineage is collected once, up front; the set of
+buckets written is an ``Observation`` on the data write; the lineage is
+aggregated from a read-back of just those bucket dirs, with the schema
+given; and the summary is the collected lineage plus an ``Observation``
+on the lineage write.
 
 Scale notes:
 - the only shuffle in the whole job is the explicit ``repartition`` on the
   salt column; everything after is narrow.
-- the committed-partition join is a broadcast anti-join (≤ n_buckets rows).
-- one giant doc cannot stall a task: ``chunk_giant_docs`` slices its span
+- one giant doc cannot stall a task: ``_chunk_rows`` slices its span
   array across rows before the kernel and a final groupBy reassembles —
   that groupBy shuffles only the chunked docs (filtered), not the corpus.
+  Both are built from SQL text, which keeps the driver's plan-building
+  cost small.
 """
 
 from __future__ import annotations
@@ -36,7 +45,7 @@ from __future__ import annotations
 import os
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from rag_document_parser_spark.config import (CATALYST_CONFIG, DEFAULT_CONFIG,
                                               ExtractConfig)
@@ -96,6 +105,9 @@ def chunk_giant_docs(df: DataFrame, max_spans: int) -> DataFrame:
 # the strip regex additionally requires the exact "<SOH><digits>/<digits>$"
 # shape before treating a row as chunked.
 _SEP = "\x01"
+# that shape as a SQL string literal (the SQL parser unescapes ``\\d``
+# to the regex's ``\d``)
+_TAG = "'" + _SEP + r"(\\d+)/(\\d+)$'"
 
 # public extract() columns (title_key is kernel-internal, used only by
 # the chunk reassembly below)
@@ -104,54 +116,34 @@ _OUT_COLS = ["doc_id", "spans_clean", "route", "title", "success", "error",
 
 
 def _chunk_rows(df: DataFrame, max_spans: int) -> DataFrame:
-    """ONE pass over the input producing kernel-ready rows for every doc:
-    normal docs emit their single untagged row; giant docs emit one row
-    per span-slice with chunk bookkeeping smuggled into the doc_id
-    ("<id><SOH><chunk>/<n>") so the kernel stays a pure (doc_id, spans)
-    operator. No filters — routing is a when/otherwise inside the explode
-    input, so the physical plan scans the source exactly once.
+    """Giant-doc rows (every row must hold more than ``max_spans``
+    spans) -> one kernel-ready row per span-slice, with the chunk
+    bookkeeping smuggled into the doc_id ("<id><SOH><chunk>/<n>") so
+    the kernel stays a pure (doc_id, spans) operator.
+
+    Built from SQL text: one parsed expression per output column costs
+    a few py4j calls, where the same Column tree built from Python
+    lambdas costs hundreds.
 
     posexplode_OUTER on purpose: plain posexplode lets
     InferFiltersFromGenerate add size()>0 filters on the generator INPUT
     expression, re-evaluating the whole slice chain per row as a
     pre-Generate filter (the lambda re-eval trap).
     """
-    n_chunks = F.when(F.size("spans") > max_spans,
-                      F.ceil(F.size("spans") / F.lit(max_spans)).cast("int")
-                      ).otherwise(F.lit(1))
-    slices = F.when(
-        n_chunks == 1, F.array(F.col("spans"))
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), n_chunks - 1),
-            lambda i: F.slice("spans", i * max_spans + 1, max_spans),
-        )
-    )
-    exploded = df.select(
-        F.col("doc_id"),
-        n_chunks.alias("_nc"),
-        F.posexplode_outer(slices).alias("chunk_id", "spans"),
-    )
-    tagged = F.when(
-        F.col("_nc") == 1, F.col("doc_id")
-    ).otherwise(
-        F.concat(F.col("doc_id"), F.lit(_SEP),
-                 F.concat_ws("/", F.col("chunk_id"), F.col("_nc"))))
-    return exploded.select(tagged.alias("doc_id"), "spans",
-                           (F.col("_nc") > 1).alias("_big"))
-
-
-def _chunk_big(df: DataFrame, max_spans: int) -> DataFrame:
-    """Giant-doc rows -> one row per span-slice (tagged doc_ids). Used by
-    the ``stable=True`` path; the default path routes everything through
-    the filter-free ``_chunk_rows`` instead."""
-    return _chunk_rows(df.where(F.size("spans") > max_spans), max_spans) \
-        .select("doc_id", "spans")
+    m = int(max_spans)
+    n = f"CAST(ceil(size(spans) / {m}) AS INT)"
+    return df.selectExpr(
+        "doc_id", f"{n} AS _nc",
+        f"posexplode_outer(transform(sequence(0, {n} - 1), "
+        f"i -> slice(spans, i * {m} + 1, {m}))) AS (chunk_id, spans)",
+    ).selectExpr(f"concat(doc_id, '{_SEP}', chunk_id, '/', _nc) AS doc_id",
+                 "spans")
 
 
 def _reassemble_big(out: DataFrame) -> DataFrame:
     """Merge kernel output of chunked rows back to one row per doc —
-    EXACTLY reproducing the unchunked contract.
+    EXACTLY reproducing the unchunked contract. SQL text, like
+    ``_chunk_rows``.
 
     Span order: each chunk arrives reading-order-sorted, and within a
     chunk ties on (offset-null, offset) preserve original array order;
@@ -166,67 +158,37 @@ def _reassemble_big(out: DataFrame) -> DataFrame:
     (nl, off, chunk_id, pos) key is minimal — the first titled kept span
     in whole-doc reading order, matching ``semantics.clean_doc``.
     """
-    strip = ("substring(doc_id, 1, length(doc_id) - "
-             "length(regexp_extract(doc_id, '" + _SEP + "\\\\d+/\\\\d+$', 0)))")
-    parsed = out.select(
-        F.expr(strip).alias("doc_id"),
-        F.regexp_extract("doc_id", _SEP + "(\\d+)/(\\d+)$", 1)
-        .cast("int").alias("chunk_id"),
+    grouped = out.selectExpr(
+        f"regexp_replace(doc_id, {_TAG}, '') AS doc_id",
+        f"CAST(regexp_extract(doc_id, {_TAG}, 1) AS INT) AS chunk_id",
         "spans_clean", "route", "title", "title_key", "success", "error",
         "wall_us",
+    ).groupBy("doc_id").agg(
+        F.expr("array_sort(collect_list(struct(chunk_id, spans_clean, "
+               "wall_us, title, title_key))) AS chunks"),
+        F.expr("flatten(collect_list(split(route, ','))) AS route_parts"),
+        F.expr("min(success) AS success"),
+        F.expr("max(error) AS error"),
     )
-    grouped = parsed.groupBy("doc_id").agg(
-        F.array_sort(
-            F.collect_list(F.struct("chunk_id", "spans_clean", "wall_us",
-                                    "title", "title_key"))
-        ).alias("chunks"),
-        F.flatten(F.collect_list(F.split("route", ","))).alias("route_parts"),
-        F.min("success").alias("success"),
-        F.max("error").alias("error"),
-    )
-    classes = F.array_sort(F.array_distinct(F.col("route_parts")))
-    classes_ne = F.filter(classes, lambda c: c != "empty")
-    annotated = F.flatten(F.transform(
-        F.col("chunks"),
-        lambda c: F.transform(
-            c["spans_clean"],
-            lambda s, i: F.struct(
-                s["offset"].isNull().cast("int").alias("nl"),
-                F.coalesce(s["offset"], F.lit(0)).alias("off"),
-                c["chunk_id"].alias("cid"),
-                i.alias("idx"),
-                s.alias("s"),
-            ),
-        ),
-    ))
-    keyed_titles = F.filter(
-        F.transform(
-            F.col("chunks"),
-            lambda c: F.when(c["title"].isNotNull(), F.struct(
-                c["title_key"]["nl"].alias("nl"),
-                c["title_key"]["off"].alias("off"),
-                c["chunk_id"].alias("cid"),
-                c["title_key"]["pos"].alias("pos"),
-                c["title"].alias("t"),
-            )),
-        ),
-        lambda x: x.isNotNull(),
-    )
-    first_title = F.element_at(
-        F.concat(F.array_sort(keyed_titles),
-                 F.array(F.lit(None).cast(
-                     "struct<nl:int,off:int,cid:int,pos:int,t:string>"))), 1)
-    return grouped.select(
+    classes = "filter(array_sort(array_distinct(route_parts)), " \
+              "c -> c != 'empty')"
+    return grouped.selectExpr(
         "doc_id",
-        F.transform(F.array_sort(annotated),
-                    lambda x: x["s"]).alias("spans_clean"),
-        F.when(F.size(classes_ne) > 0, F.array_join(classes_ne, ","))
-        .otherwise(F.lit("empty")).alias("route"),
-        first_title["t"].alias("title"),
+        "transform(array_sort(flatten(transform(chunks, c -> "
+        "transform(c.spans_clean, (s, i) -> named_struct("
+        "'nl', CAST(s.offset IS NULL AS INT), 'off', coalesce(s.offset, 0), "
+        "'cid', c.chunk_id, 'idx', i, 's', s))))), x -> x.s) AS spans_clean",
+        f"CASE WHEN size({classes}) > 0 THEN array_join({classes}, ',') "
+        "ELSE 'empty' END AS route",
+        # array_min skips the NULLs of untitled chunks
+        "array_min(transform(chunks, c -> CASE WHEN c.title IS NOT NULL "
+        "THEN named_struct('nl', c.title_key.nl, 'off', c.title_key.off, "
+        "'cid', c.chunk_id, 'pos', c.title_key.pos, 't', c.title) END)).t "
+        "AS title",
         "success",
         "error",
-        F.aggregate(F.col("chunks.wall_us"), F.lit(0).cast("long"),
-                    lambda acc, x: acc + x).alias("wall_us"),
+        "aggregate(chunks.wall_us, CAST(0 AS BIGINT), (acc, x) -> acc + x) "
+        "AS wall_us",
     )
 
 
@@ -288,46 +250,44 @@ def extract(df: DataFrame, cfg: ExtractConfig | None = None,
     if stable:
         small = df.where(F.size("spans") <= max_spans)
         big = df.where(F.size("spans") > max_spans)
-        out_small = kernel(small, cfg)
-        # spread the rare giant-doc chunks across tasks (posexplode
-        # leaves them co-located with their source row)
-        chunked = _chunk_big(big, max_spans).repartition(F.col("doc_id"))
-        out_big = _reassemble_big(kernel(chunked, cfg))
-        return out_small.select(*_OUT_COLS) \
-            .unionByName(out_big.select(*_OUT_COLS))
-
-    # exchange the RAW rows (partition_expr sees untagged doc_ids, so a
-    # caller's bucket expression partitions exactly), then route ABOVE
-    # the materialized shuffle: the common small-doc path flows straight
-    # into the kernel with zero chunk bookkeeping — no wrap/explode copy
-    # — while the rare big branch explodes post-exchange and pays one
-    # more (tiny) exchange to spread its chunks across tasks.
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism * 2
-    pexpr = partition_expr if partition_expr is not None else F.col("doc_id")
-    ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
-    is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
-    small = ex.where(_nondet(~is_big))
-    big = ex.where(_nondet(is_big))
-    out_small = kernel(small, cfg)
-    chunked = _chunk_rows(big, max_spans).select("doc_id", "spans") \
-        .repartition(F.col("doc_id"))
+    else:
+        # exchange the RAW rows (partition_expr sees untagged doc_ids, so
+        # a caller's bucket expression partitions exactly), then route
+        # ABOVE the materialized shuffle: the common small-doc path flows
+        # straight into the kernel with zero chunk bookkeeping — no
+        # wrap/explode copy — while the rare big branch explodes
+        # post-exchange.
+        if num_partitions is None:
+            num_partitions = \
+                df.sparkSession.sparkContext.defaultParallelism * 2
+        pexpr = (partition_expr if partition_expr is not None
+                 else F.col("doc_id"))
+        ex = df.select("doc_id", "spans").repartition(num_partitions, pexpr)
+        is_big = F.coalesce(F.size("spans") > max_spans, F.lit(False))
+        small = ex.where(_nondet(~is_big))
+        big = ex.where(_nondet(is_big))
+    # spread the rare giant-doc chunks across tasks (posexplode leaves
+    # them co-located with their source row)
+    chunked = _chunk_rows(big, max_spans).repartition(F.col("doc_id"))
     out_big = _reassemble_big(kernel(chunked, cfg))
-    return out_small.select(*_OUT_COLS) \
+    return kernel(small, cfg).select(*_OUT_COLS) \
         .unionByName(out_big.select(*_OUT_COLS))
 
 
 def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     path = os.path.join(out_dir, "lineage")
+    # limit(0) lets the optimizer swap the empty relation for a local one,
+    # so collecting an absent lineage runs no Spark job
+    empty = spark.createDataFrame([], LINEAGE_SCHEMA).limit(0)
     # existence probe first: avoids a noisy AnalysisException stack in the
     # JVM log on the first run. Local paths use os.path; remote URIs fall
     # back to try/except (an Iceberg catalog would make this a table check).
     if "://" not in path and not os.path.exists(path):
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return empty
     try:
         return spark.read.schema(LINEAGE_SCHEMA).parquet(path)
     except Exception:
-        return spark.createDataFrame([], LINEAGE_SCHEMA)
+        return empty
 
 
 def run_job(
@@ -363,18 +323,16 @@ def run_job(
     n_buckets = cfg.n_buckets
     df = input_df.withColumn("bucket", bucket_col(n_buckets))
 
+    # the resume probe: the committed lineage rows, collected once (one
+    # row per committed bucket, so at most n_buckets under resume). They
+    # also seed the summary, so nothing re-reads the lineage afterwards.
+    prior = read_lineage(spark, out_dir).select(
+        "partition_id", "doc_count").collect()
+    committed = sorted({r.partition_id for r in prior})
     skipped = 0
-    if resume:
-        committed = read_lineage(spark, out_dir).select(
-            F.col("partition_id").alias("bucket")
-        ).distinct()
-        skipped = committed.count()
-        if skipped:
-            # broadcast left-anti join, never a collect+isin: the committed
-            # set is <= n_buckets rows, so the broadcast is tiny, and the
-            # filter stays a hash-lookup per row instead of re-serializing
-            # an id list into every task.
-            df = df.join(F.broadcast(committed), "bucket", "left_anti")
+    if resume and committed:
+        skipped = len(committed)
+        df = df.where(~F.col("bucket").isin(committed))
 
     if fail_after_buckets is not None:
         remaining = sorted(
@@ -402,54 +360,48 @@ def run_job(
     # dynamic partition overwrite = per-bucket idempotence: a re-run after a
     # mid-write crash replaces exactly the re-processed bucket directories
     # (the Iceberg analog is a replace-partitions snapshot commit); buckets
-    # committed by other runs are untouched because the anti-join above
-    # removed their rows from this write.
+    # committed by other runs are untouched because the resume filter above
+    # removed their rows from this write. The set of buckets this run
+    # wrote rides the write itself as an observed metric.
     data_path = os.path.join(out_dir, "data")
-    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
+    wrote = Observation()
+    out.observe(wrote, F.collect_set("bucket").alias("buckets")) \
+       .write.mode("overwrite").option("partitionOverwriteMode", "dynamic") \
        .partitionBy("bucket").parquet(data_path)
+    written = sorted(wrote.get["buckets"])
 
     # lineage from a column-pruned READ-BACK of what was just written, not
     # from `out`: recomputing the lineage aggregate from `out` would run
     # the whole extraction a second time, while reading 3 small columns
     # back from columnar storage is nearly free at any scale. The read-back
-    # is restricted to the buckets THIS run actually processed: stale
-    # bucket dirs left by a crashed run, or pre-existing data under
-    # out_dir, must not be swept into lineage and marked committed by a
-    # run that never touched them. When nothing filtered the input
-    # (resume off, no fail-after hook) the run processed EVERY bucket by
-    # definition, so the set is statically range(n_buckets) — that skips
-    # a whole extra scan+distinct over the input, a fixed driver cost
-    # that otherwise eats into small-corpus scaling. (Contract already
-    # implied by resume=False: the caller declares a fresh full run over
-    # out_dir.)
-    if not resume and fail_after_buckets is None:
-        run_buckets = spark.range(n_buckets).select(
-            F.col("id").cast("int").alias("bucket"))
-    else:
-        run_buckets = df.select("bucket").distinct()
-    written = (spark.read.parquet(data_path)
-               .select("bucket", "doc_hash", "wall_us")
-               .join(F.broadcast(run_buckets), "bucket", "left_semi"))
-    lineage = (
-        written.groupBy(F.col("bucket").alias("partition_id"))
-        .agg(
-            F.count("*").alias("doc_count"),
-            F.lower(F.hex(F.bit_xor("doc_hash"))).alias("checksum"),
-            (F.sum("wall_us") / 1000).cast("long").alias("wall_ms"),
+    # opens only the bucket dirs THIS run wrote, so stale bucket dirs left
+    # by a crashed run, or pre-existing data under out_dir, are never
+    # swept into lineage and marked committed by a run that never touched
+    # them. The known schema spares a schema-inference job.
+    docs = 0
+    if written:
+        back = spark.read.schema(out.schema).option("basePath", data_path) \
+            .parquet(*[os.path.join(data_path, f"bucket={b}")
+                       for b in written])
+        lineage = (
+            back.groupBy(F.col("bucket").alias("partition_id"))
+            .agg(
+                F.count("*").alias("doc_count"),
+                F.lower(F.hex(F.bit_xor("doc_hash"))).alias("checksum"),
+                (F.sum("wall_us") / 1000).cast("long").alias("wall_ms"),
+            )
+            .withColumn("run_id", F.lit(run_id))
         )
-        .withColumn("run_id", F.lit(run_id))
-    )
-    lineage.write.mode("append").parquet(os.path.join(out_dir, "lineage"))
+        appended = Observation()
+        lineage.observe(appended, F.sum("doc_count").alias("docs")) \
+            .write.mode("append").parquet(os.path.join(out_dir, "lineage"))
+        docs = appended.get["docs"]
 
-    # single aggregation job for the summary (was two: a distinct-count
-    # and a sum — each a separate fixed-cost driver round-trip)
-    done = read_lineage(spark, out_dir).agg(
-        F.count_distinct("partition_id").alias("b"),
-        F.sum("doc_count").alias("d"),
-    ).collect()[0]
+    # the summary equals a re-read of the lineage: the rows committed
+    # before this run plus the rows this run appended
     return {
         "run_id": run_id,
         "buckets_skipped": skipped,
-        "buckets_total_committed": done["b"],
-        "docs_committed": done["d"],
+        "buckets_total_committed": len(set(committed) | set(written)),
+        "docs_committed": sum(r.doc_count for r in prior) + docs,
     }

@@ -18,6 +18,14 @@ from rag_document_parser_spark.semantics import clean_doc
 CFG = ExtractConfig(n_buckets=16, max_spans_per_chunk=512)
 
 
+def _reread(spark, out):
+    """The summary counters recomputed from the committed lineage."""
+    row = read_lineage(spark, out).agg(
+        F.count_distinct("partition_id").alias("b"),
+        F.sum("doc_count").alias("d")).collect()[0]
+    return row["b"], row["d"] or 0
+
+
 def test_resume_skips_committed_partitions(spark, tmp_path):
     out = str(tmp_path / "job")
     df = fixture_df(spark, seed=42, n_docs=120)
@@ -25,10 +33,16 @@ def test_resume_skips_committed_partitions(spark, tmp_path):
     # partial run: only 5 buckets commit, then "failure"
     r1 = run_job(spark, df, out, CFG, fail_after_buckets=5, run_id="r1")
     assert r1["buckets_total_committed"] == 5
+    # the summary comes from the resume probe plus the lineage write's
+    # observed metrics, never from a re-read, yet must equal one
+    assert (r1["buckets_total_committed"], r1["docs_committed"]) == \
+        _reread(spark, out)
 
     # resume: must skip the 5 committed buckets and finish the rest
     r2 = run_job(spark, df, out, CFG, run_id="r2")
     assert r2["buckets_skipped"] == 5
+    assert (r2["buckets_total_committed"], r2["docs_committed"]) == \
+        _reread(spark, out)
 
     lineage = read_lineage(spark, out)
     # no duplicate lineage rows per partition
@@ -43,7 +57,18 @@ def test_resume_skips_committed_partitions(spark, tmp_path):
     # a third run is a full no-op
     r3 = run_job(spark, df, out, CFG, run_id="r3")
     assert r3["docs_committed"] == 120
+    assert (r3["buckets_total_committed"], r3["docs_committed"]) == \
+        _reread(spark, out)
     assert spark.read.parquet(f"{out}/data").count() == 120
+
+
+def _stage_orphans(spark, df, out):
+    """Simulate a crash between data write and lineage append: data for
+    every doc of ``df`` under ``out``, no lineage rows at all."""
+    staged = extract(df, CFG, engine="arrow").withColumn(
+        "doc_hash", F.xxhash64("doc_id", "spans_clean")).withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(CFG.n_buckets)).cast("int"))
+    staged.write.mode("overwrite").partitionBy("bucket").parquet(f"{out}/data")
 
 
 def test_stale_bucket_dirs_not_swept_into_lineage(spark, tmp_path):
@@ -52,13 +77,7 @@ def test_stale_bucket_dirs_not_swept_into_lineage(spark, tmp_path):
     buckets — otherwise resume would silently skip them forever."""
     out = str(tmp_path / "job")
     df = fixture_df(spark, seed=7, n_docs=100)
-
-    # simulate a crash between data write and lineage append: write data
-    # for the full corpus directly, no lineage rows at all
-    staged = extract(df, CFG, engine="arrow").withColumn(
-        "doc_hash", F.xxhash64("doc_id", "spans_clean")).withColumn(
-        "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(CFG.n_buckets)).cast("int"))
-    staged.write.mode("overwrite").partitionBy("bucket").parquet(f"{out}/data")
+    _stage_orphans(spark, df, out)
 
     # a later run over a SUBSET of the corpus (some buckets absent)
     sub = fixture_df(spark, seed=7, n_docs=100).limit(10)
@@ -73,6 +92,65 @@ def test_stale_bucket_dirs_not_swept_into_lineage(spark, tmp_path):
     # only buckets this run processed are committed; orphans stay pending
     assert committed == sub_buckets
     assert len(committed) < CFG.n_buckets
+
+
+def test_fresh_run_does_not_commit_orphan_bucket_dirs(spark, tmp_path):
+    """resume=False declares a fresh full run, but orphan bucket dirs
+    already under out_dir for buckets absent from the input are still not
+    this run's: only the buckets it wrote are committed."""
+    out = str(tmp_path / "job")
+    _stage_orphans(spark, fixture_df(spark, seed=7, n_docs=100), out)
+    sub = fixture_df(spark, seed=7, n_docs=100).limit(10)
+    r = run_job(spark, sub, out, CFG, resume=False, run_id="fresh")
+
+    sub_buckets = {r.b for r in sub.select(
+        F.pmod(F.xxhash64("doc_id"), F.lit(CFG.n_buckets)).cast("int")
+        .alias("b")).distinct().collect()}
+    lineage = read_lineage(spark, out).collect()
+    assert {x.partition_id for x in lineage} == sub_buckets
+    assert len(sub_buckets) < CFG.n_buckets
+    assert sum(x.doc_count for x in lineage) == 10
+    assert r["buckets_total_committed"] == len(sub_buckets)
+    assert r["docs_committed"] == 10
+
+
+def test_empty_input_commits_nothing(spark, tmp_path):
+    out = str(tmp_path / "job")
+    df = fixture_df(spark, seed=42, n_docs=40)
+    r = run_job(spark, df.limit(0), out, CFG, run_id="empty")
+    assert (r["buckets_skipped"], r["buckets_total_committed"],
+            r["docs_committed"]) == (0, 0, 0)
+    assert read_lineage(spark, out).count() == 0
+    # a later resume still processes the whole input
+    r = run_job(spark, df, out, CFG, run_id="resume")
+    assert r["buckets_skipped"] == 0
+    assert r["docs_committed"] == 40
+    assert spark.read.parquet(f"{out}/data").count() == 40
+
+
+def test_run_job_spark_job_count(spark, tmp_path):
+    """The commit path rides the writes: pin the Spark jobs each kind of
+    run launches, so bookkeeping jobs cannot creep back in unnoticed.
+    Counts observed on Spark 4.1."""
+    sc = spark.sparkContext
+    df = fixture_df(spark, seed=42, n_docs=120)
+
+    def jobs(run_id, out, **kw):
+        group = f"{tmp_path.name}-{run_id}"
+        sc.setJobGroup(group, run_id)
+        try:
+            run_job(spark, df, str(tmp_path / out), CFG, run_id=run_id, **kw)
+        finally:
+            sc.setJobGroup("", "")
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    got = {
+        "fresh": jobs("fresh", "a", resume=False),
+        "crash": jobs("crash", "b", fail_after_buckets=5),
+        "resume": jobs("resume", "b"),
+        "noop": jobs("noop", "b"),
+    }
+    assert got == {"fresh": 6, "crash": 8, "resume": 7, "noop": 4}
 
 
 def test_lineage_checksum_matches_recompute(spark, tmp_path):

@@ -104,6 +104,14 @@ def test_frontier_schedule_host_queue_guard(spark):
         frontier_schedule(df, max_host_queue=10).collect()
 
 
+def test_frontier_schedule_empty_frontier(spark):
+    """A drained frontier schedules nothing; the host-queue guard must
+    not fire on it."""
+    df = spark.createDataFrame(
+        [], "url_id long, host string, priority long, delay_ms long")
+    assert frontier_schedule(df, max_host_queue=10).collect() == []
+
+
 def test_canonical_dedup_groups_and_solo_docs(spark):
     from rag_document_parser_spark.operators.webmeta import canonical_dedup
     mk = ('<html><head><link rel="canonical" href="{}"/>'
