@@ -635,7 +635,7 @@ sp AS (
 ), pp AS (
   SELECT doc_id, para_idx::BIGINT AS para_idx, p,
          length(p)::BIGINT AS n_chars_para
-  FROM sp WHERE length(regexp_replace(p, '\s', '', 'g')) > 0
+  FROM sp WHERE length(regexp_replace(p, '\\s', '', 'g')) > 0
 ), ev AS (
   SELECT doc_id, para_idx, n_chars_para, {ara} AS a, {lat} AS l,
     {_hits_sql('en', 'p')} AS en, {_hits_sql('de', 'p')} AS de,

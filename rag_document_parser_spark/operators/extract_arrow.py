@@ -44,6 +44,7 @@ from rag_document_parser_spark.schema import (ARROW_KERNEL_OUTPUT,
                                               ARROW_SPAN_STRUCT,
                                               ARROW_TITLE_KEY)
 from rag_document_parser_spark import semantics as S
+from rag_document_parser_spark.session import skip_unchanged_zip_reloads
 
 _KIND_CLASS_BIT = {
     "html": 1, "pdf": 2, "text": 4, "media": 8, "doc": 16, "other": 32,
@@ -804,6 +805,7 @@ def _error_batch(batch: pa.RecordBatch, err: str) -> pa.RecordBatch:
 
 def make_kernel(cfg: ExtractConfig = DEFAULT_CONFIG):
     def kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        skip_unchanged_zip_reloads()
         for batch in batches:
             try:
                 yield _clean_batch(batch, cfg)

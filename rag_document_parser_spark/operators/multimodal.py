@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from rag_document_parser_spark.session import skip_unchanged_zip_reloads
+
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_ref", T.StringType(), False),
     T.StructField("modality", T.StringType()),
@@ -80,6 +82,7 @@ def extract_media_features(df: DataFrame, batch_size_hint: int = 256) -> DataFra
     """
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_reloads()
         _decoder()
         for pdf in batches:
             feats, oks, errs, shas = [], [], [], []
@@ -204,6 +207,7 @@ def ocr_media(df: DataFrame,
     chain = [(n, probe, rec) for n, probe, rec in OCR_ENGINES if probe()]
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_reloads()
         _decoder()
         import math
 
@@ -259,6 +263,7 @@ def sample_video_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     ])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_reloads()
         _decoder()
         for pdf in batches:
             refs, idxs, tss, shas = [], [], [], []
@@ -305,6 +310,7 @@ def segment_audio(df: DataFrame, window_ms: int = 250) -> DataFrame:
     ])
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        skip_unchanged_zip_reloads()
         _decoder()
         for pdf in batches:
             refs, idxs, starts, ends, samps, shas = [], [], [], [], [], []

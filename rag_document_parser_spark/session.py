@@ -1,10 +1,16 @@
-"""SparkSession factory with the engine's standard configuration."""
+"""SparkSession factory with the engine's standard configuration, and the
+Python workers' runtime set-up."""
 
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
+from pyspark import TaskContext
 from pyspark.sql import SparkSession
+
+_eager_zip_reload = zipimport.zipimporter.invalidate_caches
 
 
 def get_spark(app: str = "rag-document-parser-spark", master: str | None = None,
@@ -34,3 +40,39 @@ def get_spark(app: str = "rag-document-parser-spark", master: str | None = None,
     for k, v in (extra or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
+
+
+def _reload_if_changed(self: zipimport.zipimporter) -> None:
+    """``zipimporter.invalidate_caches`` that re-reads the archive only when
+    its ``(st_mtime_ns, st_size)`` stamp moved since this importer last read
+    it. The stamp is taken before the read, so a write racing the read shows
+    as a new stamp next time."""
+    try:
+        st = os.stat(self.archive)
+    except OSError:
+        self._archive_stamp = None
+        _eager_zip_reload(self)
+        return
+    stamp = (st.st_mtime_ns, st.st_size)
+    if getattr(self, "_archive_stamp", None) != stamp:
+        _eager_zip_reload(self)
+        self._archive_stamp = stamp
+
+
+def skip_unchanged_zip_reloads() -> None:
+    """Inside a Python worker on CPython < 3.13, stop zipimporters from
+    re-reading unchanged archives; a no-op anywhere else and after the first
+    call in a process.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start of
+    every task. Before 3.13 that makes every zipimporter re-read its whole
+    archive directory: ``pyspark.zip`` under each of its package prefixes,
+    the py4j zip and the spark-core jar, 150-260 ms of CPU per task in a
+    reused worker. An archive whose stamp moved (a new ``--py-files`` zip)
+    is still re-read, so imports see what the eager reload would show.
+    Every Python UDF body calls this first."""
+    if (sys.version_info >= (3, 13)
+            or zipimport.zipimporter.invalidate_caches is _reload_if_changed
+            or TaskContext.get() is None):
+        return
+    zipimport.zipimporter.invalidate_caches = _reload_if_changed

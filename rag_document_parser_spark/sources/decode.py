@@ -23,6 +23,8 @@ import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from rag_document_parser_spark.session import skip_unchanged_zip_reloads
+
 # fixed fallback list (/root/reference/parsers/text_parser.py:134-144);
 # utf-8 first is handled vectorized, the rest per failing row
 FALLBACK_ENCODINGS = ("utf-8", "utf-16", "latin-1", "cp1252", "iso-8859-1")
@@ -149,6 +151,7 @@ def decode_text_payloads(df: DataFrame) -> DataFrame:
     """(doc_id string, payload binary) → (doc_id, text, encoding)."""
 
     def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        skip_unchanged_zip_reloads()
         for batch in batches:
             yield _decode_batch(batch)
 

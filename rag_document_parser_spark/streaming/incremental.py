@@ -29,6 +29,7 @@ from pyspark.sql import SparkSession, functions as F
 from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.plans.job import bucket_col, doc_hash_col, extract
 from rag_document_parser_spark.schema import INPUT_SCHEMA
+from rag_document_parser_spark.session import skip_unchanged_zip_reloads
 
 
 def stream_extract(
@@ -292,6 +293,7 @@ def stream_shard_progress(
     ])
 
     def update(key, pdfs, state):
+        skip_unchanged_zip_reloads()
         docs = 0
         spans = 0
         for pdf in pdfs:
@@ -485,6 +487,7 @@ def stream_sessionize(
     gap_us = gap_s * 1_000_000
 
     def update(key, pdfs, state):
+        skip_unchanged_zip_reloads()
         import pandas as pd
 
         if state.hasTimedOut:
@@ -644,6 +647,7 @@ def stream_integrity_ledger(
     ])
 
     def update(key, pdfs, state):
+        skip_unchanged_zip_reloads()
         import hashlib
 
         import numpy as np

@@ -8,6 +8,7 @@ so the number cannot silently drift from SURVEY.md again.
 from __future__ import annotations
 
 import re
+import warnings
 from pathlib import Path
 
 import __spark_entry__ as entry
@@ -50,3 +51,12 @@ def test_round5_rotation_front_is_the_never_gated_set():
         "segment_audio",
         "semdedup",
     ]
+
+
+def test_entry_compiles_without_warnings():
+    """Invalid string escapes (a DeprecationWarning, a SyntaxWarning from
+    3.12) would change meaning once they become errors."""
+    src = (REPO / "__spark_entry__.py").read_text(encoding="utf-8")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        compile(src, "__spark_entry__.py", "exec")
