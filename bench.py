@@ -2,7 +2,7 @@
 
 Headline metric: extraction throughput (documents/sec) through the full
 batch job (salted repartition → Arrow kernel → parquet write + lineage),
-per BASELINE.json. Secondary timings cover the catalyst engine and the
+per BASELINE.json. Secondary timings cover the pre-bucketed job and the
 training-data operator families (dedup, simhash, similarity, textstats).
 
 Env:
@@ -54,8 +54,6 @@ def main() -> None:
     from rag_document_parser_spark.operators import sampling as SAM
     from rag_document_parser_spark.operators import similarity as V
     from rag_document_parser_spark.operators import textstats as T
-    from rag_document_parser_spark.config import CATALYST_CONFIG
-    from rag_document_parser_spark.operators.extract_catalyst import extract_catalyst
     from rag_document_parser_spark.plans import job as J
 
     spark = (
@@ -132,7 +130,7 @@ def main() -> None:
     try:
         J.run_job(spark,
                   spans_df_from_documents(spark, SF_DIR, mult=min(MULT, 10)),
-                  warm_dir, engine="arrow", resume=False)
+                  warm_dir, resume=False)
     finally:
         shutil.rmtree(warm_dir, ignore_errors=True)
 
@@ -151,12 +149,12 @@ def main() -> None:
         # best-of-N: the sandbox VM has bursty external interference
         # (vCPU steal); a single timing can be 2-5x off its clean value
         for r in range(REPS):
-            timed(f"extract_job_arrow_r{r + 1}",
+            timed(f"extract_job_arrow_rep{r + 1}",
                   lambda r=r: J.run_job(spark, corpus, f"{out_dir}/r{r}",
-                                        engine="arrow", resume=False))
+                                        resume=False))
     finally:
         shutil.rmtree(out_dir, ignore_errors=True)
-    walls = sorted(timings[f"extract_job_arrow_r{r + 1}"]
+    walls = sorted(timings[f"extract_job_arrow_rep{r + 1}"]
                    for r in range(REPS))
     extract_sec = walls[0]
     extract_med = walls[len(walls) // 2] if len(walls) % 2 else round(
@@ -194,18 +192,10 @@ def main() -> None:
         # rep gets a fresh out dir so resume=False stays a full run
         def _preb():
             sub = tempfile.mkdtemp(prefix="rep_", dir=d)
-            J.run_job(spark, pre, sub, engine="arrow",
-                      resume=False, pre_bucketed=True)
+            J.run_job(spark, pre, sub, resume=False, pre_bucketed=True)
         timed_reps("extract_job_prebucketed", _preb, reps=2)
     finally:
         shutil.rmtree(d, ignore_errors=True)
-
-    # -- catalyst engine, same corpus, compute-only (forces text materialize)
-    timed_reps("extract_catalyst", lambda: extract_catalyst(corpus, CATALYST_CONFIG).agg(
-        F.count("*"),
-        F.sum(F.size("spans_clean")),
-        F.sum(F.length(F.array_join(F.col("spans_clean").getField("text"), ""))),
-    ).collect())
 
     # -- training-data operator families on the raw documents table ---------
     timed_reps("dedup_minhash_pairs",

@@ -21,9 +21,7 @@ class ExtractConfig:
     remove_empty_lines: bool = True     # text_parser.py:349-353
     preserve_whitespace: bool = False   # text_parser.py:355-360
     # json route: True = json_parser flatten (text_parser.py:250-273);
-    # False = the raw_json fallback (content unchanged). The pure-Catalyst
-    # engine implements False (no JSON recursion in Catalyst), mirroring
-    # how it implements normalize_unicode=False.
+    # False = the raw_json fallback (content unchanged).
     flatten_json: bool = True
 
     # -- html route (E1/E2) --
@@ -36,7 +34,8 @@ class ExtractConfig:
     html_mode: str = "dom"
     # density rule: drop a block when link_density > 1/2 AND its non-ws
     # text is shorter than this (short, link-dominated blocks are nav/
-    # boilerplate). Integer threshold so all engines compare identically.
+    # boilerplate). Integer threshold so every implementation compares
+    # identically.
     html_density_min_chars: int = 40
 
     # -- OCR stand-in (image_parser.py:229-233; utils/config.py:46) --
@@ -54,8 +53,8 @@ class ExtractConfig:
     # same way the reference gates it on HAS_ARABIC_SUPPORT. The
     # normalizer is character-local (strips/substitutes single chars,
     # never touches \t or \n), so whole-payload normalization before the
-    # split is exactly per-cell normalization — all three engines use
-    # that equivalence.
+    # split is exactly per-cell normalization — the kernel, the contract
+    # and the oracle all use that equivalence.
     arabic_tables: bool = False
 
     # -- unknown span kinds --
@@ -75,9 +74,3 @@ class ExtractConfig:
 
 
 DEFAULT_CONFIG = ExtractConfig()
-
-# The pure-Catalyst engine's contract: NFKC is not expressible in Catalyst
-# and JSON recursion is not either, so extract_catalyst REQUIRES these two
-# flags off (it raises otherwise — a silent config downgrade would change
-# output with no signal). The Arrow kernel implements the full DEFAULT_CONFIG.
-CATALYST_CONFIG = ExtractConfig(normalize_unicode=False, flatten_json=False)

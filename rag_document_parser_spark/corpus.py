@@ -365,9 +365,8 @@ def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
 
     # NFKC probe: ~25% of docs get non-NFKC-normal chars prepended
     # (Ⅻ→XII, ﬁ→fi, ①→1 under NFKC) so the oracle gate PINS the unicode
-    # config per engine: the Arrow query (normalize_unicode=True) folds
-    # them in E8 routes, the Catalyst query must NOT — and pdf_block text
-    # is verbatim in both.
+    # config: normalize_unicode=True folds them in E8 routes, while
+    # pdf_block text stays verbatim.
     probe = F.when(F.pmod(h2, 4) == 0, F.lit(NFKC_PROBE)).otherwise(F.lit(""))
     df = df.withColumn("text", F.concat(probe, F.col("text")))
     w = (F.pmod(h, F.lit(360)) + 41).cast("int")      # 41..400 straddles w>100 and w>50
@@ -446,8 +445,8 @@ def spans_df_from_documents(spark: SparkSession, sf_dir: str, mult: int = 1,
 
     # E5 json route: fixed-shape object from oracle-replicable columns;
     # ~20% malformed so both legs of the contract (flatten vs raw_json
-    # fallback) are exercised under the gate. flatten_json=True engines
-    # emit "title: <source>\ncount: <n>"; =False engines post-process the
+    # fallback) are exercised under the gate: a valid payload flattens to
+    # "title: <source>\ncount: <n>", a malformed one post-processes the
     # raw payload.
     json_valid = F.concat(F.lit('{"title": "'), F.col("source"),
                           F.lit('", "count": '),

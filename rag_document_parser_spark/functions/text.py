@@ -1,10 +1,10 @@
-"""Catalyst column-expression builders for the extraction contract.
+"""Column-expression builders for reporting and text statistics.
 
 Each function returns a ``pyspark.sql.Column`` built purely from built-in
 functions — JVM-side, whole-stage-codegen eligible, zero Python at runtime.
-These are shared by ``operators/extract_catalyst.py`` and the reporting /
-oracle queries in ``__spark_entry__.py``. Regex constants come from
-``semantics.py`` so all implementations agree byte-for-byte.
+They serve ``reporting.py``, ``operators/textstats.py`` and the queries in
+``__spark_entry__.py``. Regex constants come from ``semantics.py`` so every
+implementation agrees byte-for-byte.
 """
 
 from __future__ import annotations
@@ -12,356 +12,10 @@ from __future__ import annotations
 from pyspark.sql import Column, functions as F
 
 from rag_document_parser_spark import semantics as S
-from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
-
-
-def html_strip(c: Column) -> Column:
-    """E2 regex HTML strip (/root/reference/parsers/text_parser.py:309-320)."""
-    c = F.regexp_replace(c, S.RE_SCRIPT_STYLE, "")
-    c = F.regexp_replace(c, S.RE_TAG, "")
-    c = F.regexp_replace(c, S.RE_WS_RUN, " ")
-    return F.regexp_replace(c, S.RE_STRIP, "")
-
-
-def post_process_text(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E8 post-process minus NFKC (text_parser.py:339-362).
-
-    NFKC is not expressible in Catalyst; the Arrow kernel handles it. This
-    path is exact for ``cfg.normalize_unicode=False`` (and for any input
-    already NFKC-normal).
-    """
-    if cfg.remove_empty_lines:
-        c = F.regexp_replace(c, S.RE_EMPTY_LINES_LEAD, "")
-        c = F.regexp_replace(c, S.RE_EMPTY_LINES_MID, "\n")
-    if not cfg.preserve_whitespace:
-        c = F.regexp_replace(c, S.RE_SPACE_RUN, " ")
-    return F.regexp_replace(c, S.RE_STRIP, "")
 
 
 def strip(c: Column) -> Column:
     return F.regexp_replace(c, S.RE_STRIP, "")
-
-
-_CHARREF_FRAG_NOGRP = "^(?:[0-9]{1,7}|[xX][0-9a-fA-F]{1,6});"
-
-
-def _bind1(value: Column, fn) -> Column:
-    """Evaluate ``value`` ONCE and pass it to ``fn`` as a bound lambda
-    variable. Catalyst re-evaluates non-attribute subtrees at every
-    reference (the lambda re-eval trap); routing the value through a
-    single-element transform makes it a LambdaVariable, evaluated once
-    per row no matter how many times ``fn`` references it."""
-    return F.element_at(F.transform(F.array(value), fn), 1)
-
-
-def _charref_char_from_n(n: Column) -> Column:
-    """Decoded char for a BOUND codepoint (semantics.charref_char).
-
-    Catalyst has no chr(codepoint) for the full Unicode range, so the
-    character is built from its UTF-16BE bytes: hex the codepoint, pad,
-    unhex, decode — with the surrogate-pair arithmetic for supplementary
-    planes. The html5 0x80-0x9F remap is a literal map lookup."""
-    omap = F.create_map(*[F.lit(x) for k, v in S.CHARREF_OVERRIDES.items()
-                          for x in (k, v)])
-    bmp = F.decode(F.unhex(F.lpad(F.hex(n), 4, "0")), "UTF-16BE")
-    v = n - F.lit(0x10000)
-    hi = F.lit(0xD800) + F.shiftright(v, 10)
-    lo = F.lit(0xDC00) + v.bitwiseAND(F.lit(0x3FF))
-    supp = F.decode(
-        F.unhex(F.concat(F.lpad(F.hex(hi), 4, "0"),
-                         F.lpad(F.hex(lo), 4, "0"))), "UTF-16BE")
-    return F.coalesce(
-        F.try_element_at(omap, n.cast("int")),
-        F.when(((n >= 0xD800) & (n <= 0xDFFF)) | (n > 0x10FFFF),
-               F.lit("�")),
-        F.when(n <= 0xFFFF, bmp),
-        supp)
-
-
-def _charref_char(code: Column) -> Column:
-    """semantics.charref_char over a BOUND code string ('160'/'x2019')."""
-    is_hex = code.rlike("^[xX]")
-    num = F.when(is_hex,
-                 F.conv(F.substring(code, 2, 6), 16, 10).cast("long")) \
-           .otherwise(code.cast("long"))
-    return _bind1(num, _charref_char_from_n)
-
-
-def decode_charrefs(c: Column) -> Column:
-    """Numeric character references, html5-table subset
-    (semantics.RE_CHARREF / decode_charrefs), pure Catalyst.
-
-    Split on the two-char "&#" opener; each later fragment either starts
-    with a valid code (decode + keep the rest) or gets its literal "&#"
-    restored — positional, no rescan, exactly re.sub's single pass. The
-    extracted code and the derived codepoint are staged as bound lambda
-    variables (``_bind1``) so each regexp_extract runs once per
-    fragment, not once per reference."""
-    parts = F.split(c, "&#")
-    frag = lambda p: _bind1(  # noqa: E731
-        F.regexp_extract(p, S.RE_CHARREF_FRAG, 1),
-        lambda code: F.when(
-            code == "", F.concat(F.lit("&#"), p),
-        ).otherwise(
-            F.concat(_charref_char(code),
-                     F.regexp_replace(p, _CHARREF_FRAG_NOGRP, ""))))
-    dec = F.transform(parts,
-                      lambda p, i: F.when(i == 0, p).otherwise(frag(p)))
-    return F.when(c.contains("&#"), F.array_join(dec, "")).otherwise(c)
-
-
-def _entity_chain(c: Column) -> Column:
-    c = decode_charrefs(c)  # numeric first: &amp;#65; stays literal
-    for ent, ch in S.HTML_ENTITIES:
-        c = F.replace(c, F.lit(ent), F.lit(ch))
-    return c
-
-
-def _visible(c: Column) -> Column:
-    """Visible text of a markup fragment: tag strip + entity decode."""
-    return _entity_chain(F.regexp_replace(c, S.RE_TAG, ""))
-
-
-def _nws_len(c: Column) -> Column:
-    """Non-whitespace visible-char count — the link-density unit."""
-    return F.length(F.regexp_replace(_visible(c), f"[{S.WS}]", ""))
-
-
-def html_title(c: Column) -> Column:
-    """E1 <title> capture (text_parser.py:159-162); NULL when absent."""
-    t = strip(F.regexp_replace(_visible(F.regexp_extract(c, S.RE_TITLE, 1)),
-                               S.RE_WS_RUN, " "))
-    return F.when(t != "", t)
-
-
-def html_dom_strip(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E1 DOM html extraction, pure Catalyst (semantics.html_dom_strip):
-    fused decompose, block segmentation, per-block link-density filter,
-    newline join, E8. All higher-order functions — JVM-side, no Python.
-
-    Per block, the visible text is computed ONCE (``_bind1`` staging):
-    ``tlen`` (non-ws visible chars) derives from the collapsed display
-    text as ``length(remove-spaces(disp))`` — WS runs collapse to one
-    space each and edge runs strip away, so the identity holds — and
-    the anchor-removal chain for ``slen`` runs only when an ``<a`` can
-    appear (anchor-free blocks have link length 0 by definition)."""
-    s = F.regexp_replace(c, S.RE_HTML_DECOMPOSE, "")
-    s = F.regexp_replace(s, S.RE_BLOCK_TAG, S.BLOCK_SEP)
-    blocks = F.split(s, S.BLOCK_SEP)
-    stats = F.transform(blocks, lambda b: _bind1(
-        strip(F.regexp_replace(_visible(b), S.RE_WS_RUN, " ")),
-        lambda disp: _bind1(
-            F.length(F.replace(disp, F.lit(" "), F.lit(""))),
-            lambda tlen: F.struct(
-                disp.alias("disp"),
-                tlen.alias("tlen"),
-                F.when(b.rlike(r"(?i)<a\b"),
-                       _nws_len(F.regexp_replace(b, S.RE_ANCHOR, "")))
-                .otherwise(tlen).alias("slen"),
-            ))))
-    kept = F.filter(stats, lambda x: (x["disp"] != "") & ~(
-        ((x["tlen"] - x["slen"]) * 2 > x["tlen"])
-        & (x["tlen"] < F.lit(cfg.html_density_min_chars))))
-    joined = F.array_join(F.transform(kept, lambda x: x["disp"]), "\n")
-    return post_process_text(joined, cfg)
-
-
-def xml_strip(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E3 xml text extraction + E8 (text_parser.py:182-214, :97).
-    CDATA unwraps first (java regex spells the group ref ``$1``);
-    numeric character references share the html5-table subset."""
-    c = F.regexp_replace(c, S.RE_XML_CDATA, "$1")
-    c = F.regexp_replace(c, S.RE_TAG, "")
-    c = decode_charrefs(c)
-    for ent, ch in S.XML_ENTITIES:
-        c = F.replace(c, F.lit(ent), F.lit(ch))
-    return post_process_text(c, cfg)
-
-
-def markdown_strip(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E4 markdown → text regex subset + E8 (text_parser.py:216-248, :97).
-
-    Java regex replacements spell group refs ``$1`` (python/RE2: ``\\1``) —
-    the shared MD_RULES table carries the engine-neutral marker 'G1'.
-    Fence-aware (semantics.md_rules_text): split on fence delimiter
-    lines, rules only on even-index segments, fence content verbatim,
-    rejoin with '' — all inside one transform over the split array, so
-    the route stays a pure Catalyst projection. Outside-fence segments
-    still carrying a tag opener after the rules get the E4 HTML
-    passthrough (semantics.RE_MD_HTML_GATE note): tag strip + charref
-    decode + named entities, no whitespace collapse; the ruled segment
-    is staged once (``_bind1``) so the gate does not re-run the chain.
-    """
-    def rules(x: Column) -> Column:
-        for pat, repl in S.MD_RULES:
-            x = F.regexp_replace(x, pat, repl.replace("G1", "$1"))
-        return x
-
-    def html_pass(y: Column) -> Column:
-        z = F.regexp_replace(y, S.RE_TAG, "")
-        z = decode_charrefs(z)
-        for ent, ch in S.HTML_ENTITIES:
-            z = F.replace(z, F.lit(ent), F.lit(ch))
-        return z
-
-    def seg(x: Column) -> Column:
-        return _bind1(rules(x), lambda y: F.when(
-            y.rlike(S.RE_MD_HTML_GATE), html_pass(y)).otherwise(y))
-
-    segs = F.split(c, S.MD_FENCE_SPLIT, -1)
-    c = F.array_join(
-        F.transform(segs, lambda x, i: F.when(i % 2 == 0, seg(x))
-                    .otherwise(x)), "")
-    return post_process_text(c, cfg)
-
-
-def _rtf_u_char(code: Column) -> Column:
-    """semantics.rtf_u_char over a BOUND signed decimal code string —
-    BMP only by construction (N+65536 caps at 65535), so one UTF-16BE
-    decode; lone surrogates become U+FFFD."""
-    n0 = code.cast("long")
-    return _bind1(
-        F.when(n0 < 0, n0 + 65536).otherwise(n0),
-        lambda n: F.when((n >= 0xD800) & (n <= 0xDFFF), F.lit("�"))
-        .otherwise(F.decode(F.unhex(F.lpad(F.hex(n), 4, "0")),
-                            "UTF-16BE")))
-
-
-def decode_rtf_u(c: Column) -> Column:
-    """RTF \\uN unicode escapes (fallback char consumed), pure Catalyst —
-    same split-on-opener positional pass as ``decode_charrefs``. The
-    opener is the two literal chars backslash-u; fragments not starting
-    with a signed code (e.g. other \\u* control words) restore their
-    literal opener."""
-    parts = F.split(c, r"\\u")  # java regex \\u = the literal chars \u
-    frag = lambda p: _bind1(  # noqa: E731
-        F.regexp_extract(p, S.RE_RTF_U_FRAG, 1),
-        lambda code: F.when(
-            code == "", F.concat(F.lit("\\u"), p),
-        ).otherwise(
-            F.concat(_rtf_u_char(code),
-                     F.regexp_replace(p, S.RE_RTF_U_FRAG, ""))))
-    dec = F.transform(parts,
-                      lambda p, i: F.when(i == 0, p).otherwise(frag(p)))
-    return F.when(c.contains("\\u"), F.array_join(dec, "")).otherwise(c)
-
-
-def _rtf_hex_char(code: Column) -> Column:
-    """semantics.rtf_hex_char over a 2-hex-digit code string: the cp1252
-    window remap via a literal map lookup, else a latin-1 single-byte
-    decode (the code IS its own hex spelling — unhex it directly)."""
-    pairs: list[Column] = []
-    for n, ch in S.CHARREF_OVERRIDES.items():
-        if n:
-            pairs += [F.lit(f"{n:02x}"), F.lit(ch)]
-    window = F.element_at(F.create_map(*pairs), F.lower(code))
-    return F.coalesce(window, F.decode(F.unhex(code), "ISO-8859-1"))
-
-
-def decode_rtf_hex(c: Column) -> Column:
-    """RTF \\'hh hex escapes (cp1252 byte map), pure Catalyst — same
-    split-on-opener positional pass as ``decode_rtf_u``; fragments not
-    starting with two hex digits restore their literal opener."""
-    parts = F.split(c, r"\\'")  # java regex \\' = the literal chars \'
-    frag = lambda p: _bind1(  # noqa: E731
-        F.regexp_extract(p, S.RE_RTF_HEX_FRAG, 1),
-        lambda code: F.when(
-            code == "", F.concat(F.lit("\\'"), p),
-        ).otherwise(
-            F.concat(_rtf_hex_char(code),
-                     F.regexp_replace(p, S.RE_RTF_HEX_FRAG, ""))))
-    dec = F.transform(parts,
-                      lambda p, i: F.when(i == 0, p).otherwise(frag(p)))
-    return F.when(c.contains("\\'"), F.array_join(dec, "")).otherwise(c)
-
-
-def rtf_strip(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E27 rtf → text regex subset + E8 (document_parser.py:465-506).
-    \\uN escapes decode first, \\'hh hex escapes last."""
-    c = decode_rtf_u(c)
-    for pat, repl in S.RTF_RULES:
-        c = F.regexp_replace(c, pat, repl)
-    c = decode_rtf_hex(c)
-    return post_process_text(c, cfg)
-
-
-def token_confidence(slug: Column, token: Column) -> Column:
-    """md5-derived deterministic confidence in [0,1) — see semantics.token_confidence."""
-    h = F.conv(F.substring(F.md5(F.concat(slug, F.lit(":"), token)), 1, 8), 16, 10)
-    return h.cast("double") / F.lit(4294967296.0)
-
-
-def media_dims(ref: Column) -> tuple[Column, Column, Column]:
-    w = F.regexp_extract(ref, S.RE_MEDIA_REF, 1)
-    h = F.regexp_extract(ref, S.RE_MEDIA_REF, 2)
-    slug = F.regexp_extract(ref, S.RE_MEDIA_REF, 3)
-    return (
-        F.when(w != "", w.cast("int")),
-        F.when(h != "", h.cast("int")),
-        F.when(slug != "", slug),
-    )
-
-
-def ocr_standin(ref: Column, kind: Column,
-                cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """OCR-fallback stand-in (E17/E31 gates + E40 confidence filter), pure Catalyst."""
-    w, h, slug = media_dims(ref)
-    pdf_w, pdf_h = cfg.ocr_min_size_pdf
-    sl_w, sl_h = cfg.ocr_min_size_slide
-    gate = F.when(kind == "media_slide", (w > sl_w) & (h > sl_h)).otherwise(
-        (w > pdf_w) & (h > pdf_h))
-    kept = F.filter(
-        F.split(slug, "-"),
-        lambda t: token_confidence(slug, t) >= F.lit(cfg.ocr_confidence_threshold),
-    )
-    joined = F.array_join(kept, " ")
-    return F.when(gate & slug.isNotNull(), F.nullif(joined, F.lit("")))
-
-
-def _rendered_grid(c: Column, cfg: ExtractConfig) -> tuple[Column, Column]:
-    """Shared row/col-capped pipe/dash grid render: returns (n_rows,
-    rendered). The strict (E14 pdf) and lax (E30 slide) variants differ
-    only in their accept predicate over these two values.
-
-    E20 (``cfg.arabic_tables``): whole-payload Arabic normalization
-    before the split == per-cell normalization (character-local, never
-    touches \\t or \\n) — see semantics._rendered_grid."""
-    if cfg.arabic_tables:
-        c = arabic_normalize(c)
-    rows = F.split(c, "\n")
-    capped = F.transform(
-        F.slice(rows, 1, cfg.max_table_rows + 1),
-        lambda r: F.array_join(
-            F.slice(F.split(r, "\t"), 1, cfg.max_table_columns), " | "),
-    )
-    head = F.element_at(capped, 1)
-    rest = F.array_join(F.slice(capped, 2, cfg.max_table_rows), "\n")
-    dash = F.repeat(F.lit("-"), F.length(head))
-    rendered = F.when(F.size(rows) > 1,
-                      F.concat_ws("\n", head, dash, rest)) \
-                .otherwise(F.concat_ws("\n", head, dash))
-    return F.size(rows), rendered
-
-
-def render_table(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E14 accept rule + row/col caps + E38 render, pure Catalyst.
-
-    Mirrors ``semantics.render_table`` exactly: split rows on \\n / cells
-    on \\t, require >= 2 rows (header + data,
-    /root/reference/parsers/pdf_parser.py:322), cap at
-    ``max_table_rows`` data rows and ``max_table_columns`` columns
-    (/root/reference/utils/config.py:110-111), render 'h1 | h2' +
-    dash underline + data rows. Returns NULL when the span is dropped."""
-    n_rows, rendered = _rendered_grid(c, cfg)
-    return F.when(c.isNotNull() & (n_rows >= 2), rendered)
-
-
-def render_table_lax(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
-    """E30 slide-table render (LAX accept: headers OR rows,
-    powerpoint_parser.py:279) — header-only tables render as header +
-    dash underline. NULL only for NULL/empty payloads."""
-    _, rendered = _rendered_grid(c, cfg)
-    return F.when(c.isNotNull() & (c != ""), rendered)
 
 
 # E25 opt-in Arabic normalizer — the processing-side analog of the
@@ -370,17 +24,11 @@ def render_table_lax(c: Column, cfg: ExtractConfig = DEFAULT_CONFIG) -> Column:
 # opt-in by SURVEY §7. Documented subset: strip tashkeel diacritics and
 # tatweel, unify alef variants, alef-maqsura→ya, teh-marbuta→ha. The
 # char classes live in semantics.py (single source shared with the
-# python contract and the DuckDB oracles); re-exported here because the
-# Catalyst-side callers and entry oracles import them from this module.
-RE_TASHKEEL = S.RE_TASHKEEL
-ALEF_VARIANTS = S.ALEF_VARIANTS
-TATWEEL = S.TATWEEL
-
-
+# python contract, the Arrow kernel and the DuckDB oracles).
 def arabic_normalize(c: Column) -> Column:
-    c = F.regexp_replace(c, RE_TASHKEEL, "")
-    c = F.replace(c, F.lit(TATWEEL), F.lit(""))
-    c = F.regexp_replace(c, ALEF_VARIANTS, "ا")
+    c = F.regexp_replace(c, S.RE_TASHKEEL, "")
+    c = F.replace(c, F.lit(S.TATWEEL), F.lit(""))
+    c = F.regexp_replace(c, S.ALEF_VARIANTS, "ا")
     c = F.replace(c, F.lit("ى"), F.lit("ي"))
     c = F.replace(c, F.lit("ة"), F.lit("ه"))
     return c

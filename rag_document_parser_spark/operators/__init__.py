@@ -3,7 +3,6 @@ from rag_document_parser_spark.operators.dedup import (
     paragraph_dedup,
 )
 from rag_document_parser_spark.operators.extract_arrow import extract_arrow
-from rag_document_parser_spark.operators.extract_catalyst import extract_catalyst
 from rag_document_parser_spark.operators.graph import link_graph, pagerank
 from rag_document_parser_spark.operators.keywords import (
     pmi_bigrams,
@@ -67,7 +66,7 @@ __all__ = ["block_domains", "bpe_segment", "canonicalize_urls",
            "chunk_documents", "classify",
            "decontaminate", "train_bpe", "train_class_profiles",
            "dedup_clusters", "domain_stats", "extract_arrow",
-           "extract_catalyst", "extract_urls", "feature_hash_sparse",
+           "extract_urls", "feature_hash_sparse",
            "feature_hash_vectors", "hash_sample", "hash_split",
            "length_quantiles", "line_repetition_features", "link_graph",
            "media_dedup", "pack_shards", "pagerank", "paragraph_dedup",

@@ -4,12 +4,11 @@ from rag_document_parser_spark.plans.ingest import (
     read_ingest_ledger,
 )
 from rag_document_parser_spark.plans.job import (
-    chunk_giant_docs,
     extract,
     read_lineage,
     run_job,
 )
 
-__all__ = ["run_job", "extract", "chunk_giant_docs", "read_lineage",
+__all__ = ["run_job", "extract", "read_lineage",
            "curate", "curation_report", "ingest_snapshot",
            "read_ingest_ledger"]

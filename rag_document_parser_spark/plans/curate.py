@@ -56,7 +56,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from rag_document_parser_spark.config import ExtractConfig
+from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.operators.dedup import (
     dedup_clusters,
     exact_dedup,
@@ -80,7 +80,7 @@ from rag_document_parser_spark.plans.job import extract
 SEP = "\n\n"
 
 
-def curate(df: DataFrame, cfg: ExtractConfig | None = None,
+def curate(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
            min_words: int = 5, max_words: int = 100_000,
            min_alpha_ratio: float = 0.1, fix_encoding: bool = False,
            drop_restricted: bool = False,

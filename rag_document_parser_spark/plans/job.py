@@ -6,7 +6,7 @@ Pipeline (north rule, SURVEY.md §3.1 "Our Spark lifecycle"):
       → resume filter: drop rows of buckets the lineage marks committed
       → deterministic salted bucketing on xxhash64(doc_id)  [skew defusal]
       → optional intra-doc chunking for giant span arrays
-      → extraction kernel (Arrow or Catalyst)
+      → Arrow extraction kernel (vectorized mapInArrow)
       → re-assemble chunks, reading-order sort preserved
       → write output partitioned by bucket  +  lineage rows
         (partition_id=bucket, doc_count, checksum=bit_xor(doc_hash) hex,
@@ -47,16 +47,9 @@ import uuid
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from rag_document_parser_spark.config import (CATALYST_CONFIG, DEFAULT_CONFIG,
-                                              ExtractConfig)
-from rag_document_parser_spark.operators import extract_arrow, extract_catalyst
+from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
+from rag_document_parser_spark.operators import extract_arrow
 from rag_document_parser_spark.schema import LINEAGE_SCHEMA
-
-
-def _default_cfg(engine: str) -> ExtractConfig:
-    """Engine-specific default: the catalyst engine rejects configs it
-    cannot implement, so its default must be CATALYST_CONFIG."""
-    return DEFAULT_CONFIG if engine == "arrow" else CATALYST_CONFIG
 
 
 def bucket_col(n_buckets: int):
@@ -69,36 +62,6 @@ def doc_hash_col():
     xxhash64 hashes nested array<struct> natively in the JVM — measured
     ~12x cheaper than the to_json round-trip it replaces."""
     return F.xxhash64(F.col("doc_id"), F.col("spans_clean"))
-
-
-def chunk_giant_docs(df: DataFrame, max_spans: int) -> DataFrame:
-    """Split rows whose span array exceeds ``max_spans`` into chunk rows.
-
-    Adds ``chunk_id`` (0-based) and ``n_chunks``. Normal docs pass through
-    untouched with chunk_id=0, n_chunks=1. Kept as a public inspection
-    helper (tests assert chunk counts with it); ``extract`` below uses the
-    leaner disjoint-branch path instead.
-    """
-    n_chunks = F.greatest(
-        F.lit(1), F.ceil(F.size("spans") / F.lit(max_spans))
-    ).cast("int")
-    chunked = df.withColumn("n_chunks", n_chunks)
-    small = chunked.where(F.col("n_chunks") == 1).withColumn("chunk_id", F.lit(0))
-    big = (
-        chunked.where(F.col("n_chunks") > 1)
-        .select(
-            "doc_id",
-            "n_chunks",
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.col("n_chunks") - 1),
-                    lambda i: F.slice("spans", i * max_spans + 1, max_spans),
-                )
-            ).alias("chunk_id", "spans"),
-        )
-        .select("doc_id", "spans", "n_chunks", "chunk_id")
-    )
-    return small.select("doc_id", "spans", "n_chunks", "chunk_id").unionByName(big)
 
 
 # U+0001 as chunk-tag delimiter: cannot collide with printable doc_ids, and
@@ -205,17 +168,11 @@ def _nondet(c):
     return F.when(F.spark_partition_id() >= 0, c).otherwise(F.lit(False))
 
 
-def extract(df: DataFrame, cfg: ExtractConfig | None = None,
-            engine: str = "arrow", chunk: bool = True,
-            stable: bool = False,
+def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
+            chunk: bool = True, stable: bool = False,
             partition_expr=None, num_partitions: int | None = None,
             ) -> DataFrame:
     """The composable single-operator form (SURVEY.md §3.2): no sinks.
-
-    ``cfg=None`` resolves to the engine's own default (DEFAULT_CONFIG
-    for arrow, CATALYST_CONFIG for catalyst — the catalyst engine raises
-    on configs it cannot implement, so defaulting it to DEFAULT_CONFIG
-    would be a guaranteed error).
 
     Chunking (default path, ``stable=False``): the input is scanned
     ONCE into a protective exchange
@@ -240,11 +197,8 @@ def extract(df: DataFrame, cfg: ExtractConfig | None = None,
     determinism — with an unstable plan docs can be lost or duplicated
     between the two scans.
     """
-    if cfg is None:
-        cfg = _default_cfg(engine)
-    kernel = extract_arrow if engine == "arrow" else extract_catalyst
     if not chunk:
-        return kernel(df, cfg).select(*_OUT_COLS)
+        return extract_arrow(df, cfg).select(*_OUT_COLS)
     max_spans = cfg.max_spans_per_chunk
 
     if stable:
@@ -269,8 +223,8 @@ def extract(df: DataFrame, cfg: ExtractConfig | None = None,
     # spread the rare giant-doc chunks across tasks (posexplode leaves
     # them co-located with their source row)
     chunked = _chunk_rows(big, max_spans).repartition(F.col("doc_id"))
-    out_big = _reassemble_big(kernel(chunked, cfg))
-    return kernel(small, cfg).select(*_OUT_COLS) \
+    out_big = _reassemble_big(extract_arrow(chunked, cfg))
+    return extract_arrow(small, cfg).select(*_OUT_COLS) \
         .unionByName(out_big.select(*_OUT_COLS))
 
 
@@ -294,8 +248,7 @@ def run_job(
     spark: SparkSession,
     input_df: DataFrame,
     out_dir: str,
-    cfg: ExtractConfig | None = None,
-    engine: str = "arrow",
+    cfg: ExtractConfig = DEFAULT_CONFIG,
     resume: bool = True,
     fail_after_buckets: int | None = None,
     run_id: str | None = None,
@@ -318,8 +271,6 @@ def run_job(
     files per bucket directory).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    if cfg is None:
-        cfg = _default_cfg(engine)
     n_buckets = cfg.n_buckets
     df = input_df.withColumn("bucket", bucket_col(n_buckets))
 
@@ -347,11 +298,10 @@ def run_job(
     # pre_bucketed inputs skip it entirely (stable=True: the bucketed
     # input is deterministic, the two-scan chunk path is safe and free).
     if pre_bucketed:
-        out = extract(df.select("doc_id", "spans"), cfg, engine=engine,
-                      stable=True)
+        out = extract(df.select("doc_id", "spans"), cfg, stable=True)
     else:
         par = min(n_buckets, spark.sparkContext.defaultParallelism * 2)
-        out = extract(df.select("doc_id", "spans"), cfg, engine=engine,
+        out = extract(df.select("doc_id", "spans"), cfg,
                       partition_expr=bucket_col(n_buckets),
                       num_partitions=par)
     out = out.withColumn("doc_hash", doc_hash_col()) \

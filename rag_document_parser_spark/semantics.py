@@ -3,10 +3,9 @@
 This module defines, in pure Python, exactly what ``spans_clean`` must be
 for a given ``(doc_id, spans)`` row. It is the *golden oracle* for the
 pytest invariant (span-sequence equality on (kind, text, media_ref, order),
-per BASELINE.json) and the spec that the Catalyst path
-(``operators/extract_catalyst.py``), the Arrow kernel
+per BASELINE.json) and the spec that the Arrow kernel
 (``operators/extract_arrow.py``) and the DuckDB oracle SQL
-(``__spark_entry__.py``) all implement.
+(``__spark_entry__.py``) both implement.
 
 Every rule cites the reference behavior it reproduces
 (``/root/reference/...``). Regexes are **RE2-safe** (no backreferences, no
@@ -525,8 +524,8 @@ def ocr_standin(media_ref: str, kind: str, cfg: ExtractConfig = DEFAULT_CONFIG) 
     return " ".join(kept) if kept else None
 
 
-# E25/E20 shared Arabic char classes — the single source all engines and
-# the DuckDB oracles embed (functions/text.py re-exports them). Documented
+# E25/E20 shared Arabic char classes — the single source the Arrow kernel,
+# functions/text.py and the DuckDB oracles embed. Documented
 # subset: tashkeel diacritics + tatweel strip, alef-variant/alef-maqsura/
 # teh-marbuta unification — the processing-side analog of the reference's
 # reshape+bidi display pipeline (document_parser.py:410-429).
@@ -654,8 +653,7 @@ def clean_span(kind: str, text: Optional[str], media_ref: Optional[str],
         return (cleaned != ""), cleaned
     if kind == "json":
         # cfg.flatten_json=True → the reference json_parser path; False →
-        # its raw_json fallback (content unchanged before post-process),
-        # which is also what the pure-Catalyst engine implements.
+        # its raw_json fallback (content unchanged before post-process).
         if text is None:
             return False, None
         flat = json_flatten(text) if cfg.flatten_json else None

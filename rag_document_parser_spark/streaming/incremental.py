@@ -50,7 +50,7 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    out = extract(stream, cfg, engine="arrow", chunk=False)
+    out = extract(stream, cfg, chunk=False)
     writer = (
         out.writeStream.format("parquet")
         .option("path", os.path.join(output_dir, "data"))
@@ -84,7 +84,7 @@ def stream_extract_dedup_unbounded(
     semantics.
     """
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
-    out = extract(stream, cfg, engine="arrow", chunk=False)
+    out = extract(stream, cfg, chunk=False)
     deduped = (
         out.withColumn(
             "doc_hash",
@@ -136,8 +136,7 @@ def stream_extract_dedup_bounded(
         .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["doc_hash"])
     )
-    out = extract(deduped.select("doc_id", "spans"), cfg,
-                  engine="arrow", chunk=False)
+    out = extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
     return (
         out.writeStream.format("parquet")
         .option("path", os.path.join(output_dir, "data"))
@@ -187,8 +186,7 @@ def stream_curate(
         .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["doc_hash"])
     )
-    out = extract(deduped.select("doc_id", "spans"), cfg,
-                  engine="arrow", chunk=False)
+    out = extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
     doc = out.select(
         "doc_id", "route", "title", "success",
         F.array_join(F.col("spans_clean").getField("text"), "\n\n")
@@ -359,7 +357,7 @@ def stream_extract_with_lineage(
             out.unpersist()
 
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
-    out = extract(stream, cfg, engine="arrow", chunk=False)
+    out = extract(stream, cfg, chunk=False)
     return (
         out.writeStream.foreachBatch(commit_batch)
         .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))

@@ -8,7 +8,7 @@ Cluster deployment per the north rule:
         scripts/run_extract_job.py \
         --input  db.documents_or_parquet_path \
         --output s3://bucket/extract_out \
-        --buckets 4096 --engine arrow
+        --buckets 4096
 
 Re-running the same command resumes: committed buckets (lineage) are
 skipped, partially-written buckets are overwritten idempotently.
@@ -26,7 +26,6 @@ def main() -> None:
     p.add_argument("--input", required=True,
                    help="documents source: parquet path or catalog table")
     p.add_argument("--output", required=True, help="output directory/prefix")
-    p.add_argument("--engine", choices=["arrow", "catalyst"], default="arrow")
     p.add_argument("--buckets", type=int, default=256,
                    help="resume granularity (lineage partitions)")
     p.add_argument("--no-resume", action="store_true",
@@ -50,12 +49,8 @@ def main() -> None:
         df = spans_df_from_documents(spark, args.input, mult=args.mult)
     else:
         df = read_documents(spark, args.input)
-    from rag_document_parser_spark.config import CATALYST_CONFIG
-    import dataclasses
-    cfg = (dataclasses.replace(CATALYST_CONFIG, n_buckets=args.buckets)
-           if args.engine == "catalyst"
-           else ExtractConfig(n_buckets=args.buckets))
-    summary = run_job(spark, df, args.output, cfg, engine=args.engine,
+    summary = run_job(spark, df, args.output,
+                      ExtractConfig(n_buckets=args.buckets),
                       resume=not args.no_resume)
     print(json.dumps(summary))
 

@@ -132,18 +132,13 @@ def test_error_rows_counted_invalid(spark):
 def test_unknown_kinds_error_mode_all_engines(spark):
     """unknown_kinds="error": a doc carrying an unrecognized kind becomes
     a whole-doc error result (the reference's unsupported-file-type
-    ParseResult) in the contract, the Arrow kernel AND the Catalyst
-    engine; clean docs still succeed."""
+    ParseResult) in the contract and the Arrow kernel; clean docs still
+    succeed."""
     from rag_document_parser_spark import semantics as S
     from rag_document_parser_spark.config import ExtractConfig
     from rag_document_parser_spark.operators.extract_arrow import extract_arrow
-    from rag_document_parser_spark.operators.extract_catalyst import (
-        extract_catalyst,
-    )
 
-    cfg_a = ExtractConfig(unknown_kinds="error")
-    cfg_c = ExtractConfig(unknown_kinds="error", normalize_unicode=False,
-                          flatten_json=False)
+    cfg = ExtractConfig(unknown_kinds="error")
     rows = [
         ("ok", [("text", "hello", None, 0)]),
         ("bad", [("text", "hi", None, 0), ("alien_v2", "x", None, 1)]),
@@ -152,17 +147,16 @@ def test_unknown_kinds_error_mode_all_engines(spark):
     df = spark.createDataFrame(rows, schema="doc_id string, spans "
                                "array<struct<kind:string,text:string,"
                                "media_ref:string,offset:int>>")
-    for out in (extract_arrow(df, cfg_a), extract_catalyst(df, cfg_c)):
-        got = {r.doc_id: r for r in out.collect()}
-        assert got["ok"].success and got["ok"].route == "text"
-        assert not got["bad"].success
-        assert got["bad"].route == "error"
-        assert got["bad"].error == "Unsupported kind: alien_v2"
-        assert got["bad"].spans_clean == []
-        assert got["bad-null-kind"].error == "Unsupported kind: None"
+    got = {r.doc_id: r for r in extract_arrow(df, cfg).collect()}
+    assert got["ok"].success and got["ok"].route == "text"
+    assert not got["bad"].success
+    assert got["bad"].route == "error"
+    assert got["bad"].error == "Unsupported kind: alien_v2"
+    assert got["bad"].spans_clean == []
+    assert got["bad-null-kind"].error == "Unsupported kind: None"
     # contract agrees
     _, route, _, success, err = S.clean_doc(
-        [{"kind": "alien_v2", "text": "x", "offset": 0}], cfg_a)
+        [{"kind": "alien_v2", "text": "x", "offset": 0}], cfg)
     assert (route, success, err) == ("error", False,
                                      "Unsupported kind: alien_v2")
 

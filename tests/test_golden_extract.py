@@ -1,17 +1,16 @@
 """Golden-fixture invariant: span-sequence equality (kind, text, media_ref, order).
 
-Both engine implementations (Arrow kernel, pure Catalyst) must reproduce
-``semantics.clean_doc`` exactly on the FIXTURES.md corpus. This is the
-north-rule verify (`python -m pytest -x -q`).
+The Arrow kernel must reproduce ``semantics.clean_doc`` exactly on the
+FIXTURES.md corpus. This is the north-rule verify (`python -m pytest -x -q`).
 """
 
 from __future__ import annotations
 
 import pytest
 
-from rag_document_parser_spark.config import ExtractConfig
+from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.corpus import fixture_df, generate_fixture_docs
-from rag_document_parser_spark.operators import extract_arrow, extract_catalyst
+from rag_document_parser_spark.operators import extract_arrow
 from rag_document_parser_spark.semantics import clean_doc
 
 N_DOCS = 250
@@ -57,27 +56,16 @@ def docs():
     return generate_fixture_docs(seed=42, n_docs=N_DOCS)
 
 
-def test_arrow_kernel_matches_golden(spark, docs):
-    cfg = ExtractConfig()
+# the raw legs: no NFKC, and the reference's raw_json fallback for every
+# json span
+RAW_CONFIG = ExtractConfig(normalize_unicode=False, flatten_json=False)
+
+
+@pytest.mark.parametrize("cfg", [DEFAULT_CONFIG, RAW_CONFIG],
+                         ids=["default", "raw"])
+def test_arrow_kernel_matches_golden(spark, docs, cfg):
     df = fixture_df(spark, seed=42, n_docs=N_DOCS)
     _assert_equal(_expected(docs, cfg), _actual(extract_arrow(df, cfg)))
-
-
-def test_catalyst_matches_golden(spark, docs):
-    # Catalyst path implements the contract at normalize_unicode=False
-    # and flatten_json=False (the reference's raw_json fallback leg)
-    cfg = ExtractConfig(normalize_unicode=False, flatten_json=False)
-    df = fixture_df(spark, seed=42, n_docs=N_DOCS)
-    _assert_equal(_expected(docs, cfg), _actual(extract_catalyst(df, cfg)))
-
-
-def test_engines_agree_on_ascii(spark, docs):
-    """On ASCII-only whitespace input the two engines are identical."""
-    cfg = ExtractConfig(normalize_unicode=False, flatten_json=False)
-    df = fixture_df(spark, seed=7, n_docs=60)
-    a = _actual(extract_arrow(df, cfg))
-    c = _actual(extract_catalyst(df, cfg))
-    _assert_equal(a, c)
 
 
 NASTY_HTML = [
@@ -109,7 +97,7 @@ NASTY_HTML = [
 
 def test_dom_adversarial_html_all_engines(spark):
     """Hand-crafted nasty markup: the DOM contract is a total function;
-    Python, Arrow, and Catalyst must agree byte-for-byte even on
+    Python and Arrow must agree byte-for-byte even on
     malformed input, and the specific traps (header-vs-head, abbr-vs-a,
     density boundary, comment-hidden markup) must behave as specified."""
     from rag_document_parser_spark.schema import INPUT_SCHEMA
@@ -122,7 +110,6 @@ def test_dom_adversarial_html_all_engines(spark):
     expected = _expected(docs, cfg)
     df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
     _assert_equal(expected, _actual(extract_arrow(df, cfg)))
-    _assert_equal(expected, _actual(extract_catalyst(df, cfg)))
 
     txt = {d["doc_id"]: (expected[d["doc_id"]][0][0][1]
                          if expected[d["doc_id"]][0] else "")
@@ -143,7 +130,7 @@ def test_dom_adversarial_html_all_engines(spark):
 def test_dom_html_differs_from_regex_fallback(spark, docs):
     """The DOM path (E1) is really DOM semantics, not the regex fallback:
     titles captured, nav link-blocks dropped by density, newline block
-    structure — and both engines implement BOTH modes against the
+    structure — and the kernel implements BOTH modes against the
     contract."""
     dom_cfg = ExtractConfig(normalize_unicode=False, flatten_json=False)
     rx_cfg = ExtractConfig(normalize_unicode=False, flatten_json=False,
@@ -152,7 +139,6 @@ def test_dom_html_differs_from_regex_fallback(spark, docs):
     exp_dom = _expected(docs, dom_cfg)
     exp_rx = _expected(docs, rx_cfg)
     _assert_equal(exp_rx, _actual(extract_arrow(df, rx_cfg)))
-    _assert_equal(exp_rx, _actual(extract_catalyst(df, rx_cfg)))
 
     html_ids = [d["doc_id"] for d in docs
                 if any(s.get("kind") == "html" and s.get("text")
@@ -169,9 +155,9 @@ def test_dom_html_differs_from_regex_fallback(spark, docs):
 
 
 def test_table_caps_enforced_in_both_engines(spark):
-    """Row/col caps (semantics.render_table) bind in the engines, not just
+    """Row/col caps (semantics.render_table) bind in the kernel, not just
     the oracle: a tiny-cap config on an over-cap payload must truncate
-    identically in pure Python, Arrow, and Catalyst."""
+    identically in pure Python and Arrow."""
     from rag_document_parser_spark.schema import INPUT_SCHEMA
 
     cfg = ExtractConfig(normalize_unicode=False, flatten_json=False,
@@ -195,7 +181,6 @@ def test_table_caps_enforced_in_both_engines(spark):
     assert expected["headeronly"][0] == []  # accept rule drops it
     df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
     _assert_equal(expected, _actual(extract_arrow(df, cfg)))
-    _assert_equal(expected, _actual(extract_catalyst(df, cfg)))
 
 
 def test_idempotence(spark):
@@ -225,7 +210,7 @@ def test_idempotence(spark):
 
 def test_arabic_tables_three_way_parity(spark):
     """E20 opt-in: Arabic cell normalization inside the table render
-    agrees across pure Python, Arrow, and Catalyst — including the
+    agrees across pure Python and Arrow — including the
     strict-vs-lax accept split on a header-only payload and a doc with
     the flag OFF (cells pass through verbatim)."""
     from rag_document_parser_spark.schema import INPUT_SCHEMA
@@ -251,13 +236,11 @@ def test_arabic_tables_three_way_parity(spark):
     assert expected["headeronly"][0][0][0] == "table_slide"  # strict drops
     df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
     _assert_equal(expected, _actual(extract_arrow(df, cfg)))
-    _assert_equal(expected, _actual(extract_catalyst(df, cfg)))
 
     off = ExtractConfig(normalize_unicode=False, flatten_json=False)
     exp_off = _expected(docs, off)
     assert "الإِسْمُ" in exp_off["full"][0][0][1]  # verbatim when off
     _assert_equal(exp_off, _actual(extract_arrow(df, off)))
-    _assert_equal(exp_off, _actual(extract_catalyst(df, off)))
 
 
 MD_HTML_DOCS = [
@@ -279,7 +262,7 @@ MD_HTML_DOCS = [
 def test_markdown_inline_html_passthrough_all_engines(spark):
     """E4 HTML passthrough (round-5 promotion): markdown spans whose
     post-MD_RULES text still carries a tag opener get tag strip +
-    charref + named entities in Python, Arrow, and Catalyst alike;
+    charref + named entities in Python and Arrow alike;
     fences and tagless segments stay untouched."""
     from rag_document_parser_spark.schema import INPUT_SCHEMA
 
@@ -291,7 +274,6 @@ def test_markdown_inline_html_passthrough_all_engines(spark):
     expected = _expected(docs, cfg)
     df = spark.createDataFrame(docs, schema=INPUT_SCHEMA)
     _assert_equal(expected, _actual(extract_arrow(df, cfg)))
-    _assert_equal(expected, _actual(extract_catalyst(df, cfg)))
 
     txt = {d["doc_id"]: (expected[d["doc_id"]][0][0][1]
                          if expected[d["doc_id"]][0] else "")

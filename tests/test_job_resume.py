@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from rag_document_parser_spark.config import ExtractConfig
 from rag_document_parser_spark.corpus import fixture_df, generate_fixture_docs
 from rag_document_parser_spark.plans.job import (
-    chunk_giant_docs,
+    _chunk_rows,
     extract,
     read_lineage,
     run_job,
@@ -65,7 +65,7 @@ def test_resume_skips_committed_partitions(spark, tmp_path):
 def _stage_orphans(spark, df, out):
     """Simulate a crash between data write and lineage append: data for
     every doc of ``df`` under ``out``, no lineage rows at all."""
-    staged = extract(df, CFG, engine="arrow").withColumn(
+    staged = extract(df, CFG).withColumn(
         "doc_hash", F.xxhash64("doc_id", "spans_clean")).withColumn(
         "bucket", F.pmod(F.xxhash64("doc_id"), F.lit(CFG.n_buckets)).cast("int"))
     staged.write.mode("overwrite").partitionBy("bucket").parquet(f"{out}/data")
@@ -177,13 +177,17 @@ def test_chunking_splits_and_reassembles_giant_doc(spark):
     giant = 5000  # ~10x chunk budget
     df = fixture_df(spark, seed=42, n_docs=30, giant_doc_spans=giant)
 
-    chunked = chunk_giant_docs(df, CFG.max_spans_per_chunk)
-    giant_chunks = chunked.where(F.col("doc_id") == "doc-giant")
+    # the chunk path extract runs: over-cap rows only, one row per
+    # span-slice tagged "<doc_id><SOH><chunk>/<n>"
+    big = df.where(F.size("spans") > CFG.max_spans_per_chunk)
+    chunked = _chunk_rows(big, CFG.max_spans_per_chunk)
+    giant_chunks = chunked.where(
+        F.col("doc_id").rlike("^doc-giant\x01[0-9]+/[0-9]+$"))
     n = giant_chunks.count()
     assert n == -(-giant // CFG.max_spans_per_chunk)  # ceil
     assert giant_chunks.agg(F.sum(F.size("spans"))).collect()[0][0] == giant
 
-    out = extract(df, CFG, engine="arrow", chunk=True)
+    out = extract(df, CFG, chunk=True)
     row = out.where(F.col("doc_id") == "doc-giant").collect()[0]
     docs = {d["doc_id"]: d for d in
             generate_fixture_docs(seed=42, n_docs=30, giant_doc_spans=giant)}
@@ -232,20 +236,18 @@ def test_chunked_tie_breaks_and_title_are_exact(spark):
                                "media_ref:string,offset:int>>")
     cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
                         flatten_json=False)
-    for engine in ("arrow", "catalyst"):
-        got = {r["doc_id"]: r for r in
-               extract(df, cfg, engine=engine, chunk=True).collect()}
-        texts = [s["text"] for s in got["ties"]["spans_clean"]]
-        assert texts == [f"tie {j}" for j in range(10)], engine
-        assert got["titles"]["title"] == "alpha first", engine
-        # offset tie at 3: html_a sits at array position 0 → wins
-        assert got["titles-tied"]["title"] == "zeta last", engine
-        unchunked = {r["doc_id"]: r for r in
-                     extract(df, cfg, engine=engine, chunk=False).collect()}
-        for d in got:
-            assert got[d]["title"] == unchunked[d]["title"], (engine, d)
-            assert [tuple(s) for s in got[d]["spans_clean"]] == \
-                [tuple(s) for s in unchunked[d]["spans_clean"]], (engine, d)
+    got = {r["doc_id"]: r for r in extract(df, cfg, chunk=True).collect()}
+    texts = [s["text"] for s in got["ties"]["spans_clean"]]
+    assert texts == [f"tie {j}" for j in range(10)]
+    assert got["titles"]["title"] == "alpha first"
+    # offset tie at 3: html_a sits at array position 0 → wins
+    assert got["titles-tied"]["title"] == "zeta last"
+    unchunked = {r["doc_id"]: r for r in
+                 extract(df, cfg, chunk=False).collect()}
+    for d in got:
+        assert got[d]["title"] == unchunked[d]["title"], d
+        assert [tuple(s) for s in got[d]["spans_clean"]] == \
+            [tuple(s) for s in unchunked[d]["spans_clean"]], d
 
 
 def test_chunked_extract_single_scan_plan(spark):
@@ -254,11 +256,10 @@ def test_chunked_extract_single_scan_plan(spark):
     protective exchange (ReusedExchange), so a non-deterministic input
     plan cannot lose or duplicate docs between branches."""
     df = fixture_df(spark, seed=7, n_docs=40)
-    cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
-                        flatten_json=False)
+    cfg = ExtractConfig(max_spans_per_chunk=4)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = extract(df, cfg, engine="catalyst", chunk=True) \
+        plan = extract(df, cfg, chunk=True) \
             ._jdf.queryExecution().executedPlan().toString()
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
@@ -282,9 +283,8 @@ def test_chunked_extract_nondeterministic_input_exactly_once(spark):
             i.cast("int").alias("offset")))
     df = base.select(F.concat(F.lit("d"), F.col("id").cast("string"))
                      .alias("doc_id"), spans.alias("spans"))
-    cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
-                        flatten_json=False)
-    out = extract(df, cfg, engine="catalyst", chunk=True).collect()
+    cfg = ExtractConfig(max_spans_per_chunk=4)
+    out = extract(df, cfg, chunk=True).collect()
     ids = [r["doc_id"] for r in out]
     assert len(ids) == 120
     assert len(set(ids)) == 120
