@@ -232,7 +232,9 @@ def source_sketch(df: DataFrame, text_col: str = "text",
     bottom-k(bottom-k(A) ∪ bottom-k(B))`` — union-merge then re-trim
     equals the sketch of everything, regardless of how the corpus was
     split. That makes it the right bounded cross-batch state for the
-    streaming face (``streaming.stream_source_sketch``) and for
+    streaming face (``streaming.stream_source_sketch``, which applies
+    this merge per micro-batch: Spark has no bottom-k aggregate its
+    state store could hold) and for
     snapshot-over-snapshot accumulation: state is ≤ sources · k rows
     forever. Bottom-k runs through ``topk_per_query``'s two-stage
     partial rank, so a mega-source never sorts inside one task.

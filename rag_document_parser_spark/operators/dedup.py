@@ -339,6 +339,14 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     acceptable because the exact-dup tier upstream owns identical-text
     groups; the cap bounds worst-case join work at N·bands·cap instead
     of N².
+
+    Storage cost of the cap: the capped path ``localCheckpoint``s the
+    whole banded relation (N·bands rows of ``(id, band, band_sig)``),
+    eagerly at call time, so the signatures are built once for its
+    three reads. Those rows sit in executor block storage (memory,
+    spilling to local disk) until the returned plan is
+    garbage-collected, and a lost executor loses them with no lineage
+    to recompute from. The uncapped path materializes nothing.
     """
     r = k // bands
     sigs = minhash_signatures(df, text_col, id_col, n, k)

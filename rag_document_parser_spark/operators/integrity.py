@@ -34,11 +34,9 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
+from rag_document_parser_spark.operators.dedup import _md5_long
+
 __all__ = ["leaf_checksums", "merkle_tree", "merkle_root", "order_certificate"]
-
-
-def _u60(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def leaf_checksums(df: DataFrame, id_col: str = "doc_id",
@@ -50,12 +48,12 @@ def leaf_checksums(df: DataFrame, id_col: str = "doc_id",
     md5 of the bit_xor fold of md5-60(id || 0x1f || payload) — any
     row change, add, or drop flips the fold. Empty buckets digest
     md5('0') so the tree shape never depends on the data."""
-    bucket = F.pmod(_u60(F.concat(F.col(id_col).cast("string"),
-                                  F.lit(salt))), F.lit(n_buckets))
+    bucket = F.pmod(_md5_long(F.concat(F.col(id_col).cast("string"),
+                                       F.lit(salt))), F.lit(n_buckets))
     rows = df.select(
         bucket.cast("long").alias("idx"),
-        _u60(F.concat(F.col(id_col).cast("string"), F.lit("\x1f"),
-                      F.col(payload_col).cast("string"))).alias("h"))
+        _md5_long(F.concat(F.col(id_col).cast("string"), F.lit("\x1f"),
+                           F.col(payload_col).cast("string"))).alias("h"))
     agg = (rows.groupBy("idx")
            .agg(F.expr("bit_xor(h)").cast("long").alias("_x")))
     frame = (df.sparkSession.range(0, n_buckets)
@@ -121,8 +119,6 @@ def order_certificate(shuffled: DataFrame, key_col: str = "doc_id",
     certificate is reproducible on any partitioning. Output:
     ``(shard, n_rows, order_digest)``.
     """
-    from rag_document_parser_spark.operators.dedup import _md5_long
-
     h = _md5_long(F.concat(F.col(key_col).cast("string"), F.lit(":"),
                            F.col(pos_col).cast("string")))
     return (shuffled.select(F.col(shard_col).alias("shard"),

@@ -116,8 +116,9 @@ def weights_from_mass(per: DataFrame, alpha: str = "0.5") -> DataFrame:
     """Shares from a pre-aggregated ``(group, n_docs, mass)`` table —
     the second half of :func:`temperature_weights`, exposed so an
     incrementally-maintained mass state (streaming.incremental.
-    stream_group_mass merges per-batch aggregates by plain sum) yields
-    the exact same shares as a batch pass over everything ever seen."""
+    stream_group_mass keeps it as a count/sum streaming aggregation)
+    yields the exact same shares as a batch pass over everything ever
+    seen."""
     staged = per.withColumn("w", _tempered(F.col("mass"), alpha))
     tot = staged.agg(F.sum("mass").alias("_tm"), F.sum("w").alias("_tw"))
     return (staged.crossJoin(F.broadcast(tot))
@@ -231,7 +232,7 @@ def unimax_allocation(per: DataFrame, budget_tokens: int,
     was consumed by the ONE aggregate that produced ``per``. Headroom:
     ``cap·(n−k+1)`` needs cap·n < 9.2e18 — groups are languages or
     sources (hundreds), never high-cardinality keys. Streaming face
-    for free: ``streaming.stream_group_mass``'s persisted state has
+    for free: ``streaming.stream_group_mass``'s published state has
     exactly this input shape, so the allocation over a growing corpus
     is the same call on the state table (test-pinned equality).
     """

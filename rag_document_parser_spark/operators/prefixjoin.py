@@ -46,15 +46,11 @@ candidate pair list (already small) back to the full shingle stream.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-from rag_document_parser_spark.operators.dedup import shingle_df
+from rag_document_parser_spark.operators.dedup import _md5_long, shingle_df
 
 __all__ = ["prefix_filter_pairs"]
-
-
-def _h60(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def prefix_filter_pairs(df: DataFrame, text_col: str = "text",
@@ -80,7 +76,7 @@ def prefix_filter_pairs(df: DataFrame, text_col: str = "text",
         "id", F.size("shingles").alias("n_sh"),
         F.array_sort(F.transform(
             "shingles",
-            lambda s: F.struct(_h60(s).alias("h"), s.alias("s"))))
+            lambda s: F.struct(_md5_long(s).alias("h"), s.alias("s"))))
         .alias("_o"))
     if stage:
         ordered = ordered.localCheckpoint()

@@ -26,15 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-
-def _shr(c, bits):
-    # F.shiftright requires a Python int for numBits; call_function
-    # accepts a Column (needed inside higher-order lambdas)
-    return F.call_function("shiftright", c, bits)
-
-
-def _shl(c, bits):
-    return F.call_function("shiftleft", c, bits)
+from rag_document_parser_spark.operators.dedup import _shl, _shr
 
 
 def _dot(a, b):

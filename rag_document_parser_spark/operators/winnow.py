@@ -40,13 +40,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
-from rag_document_parser_spark.operators.dedup import words
+from rag_document_parser_spark.operators.dedup import _md5_long, words
 
 __all__ = ["winnow_fingerprints", "winnow_pairs"]
-
-
-def _h60(c: Column) -> Column:
-    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
 def _gram_hashes(df: DataFrame, text_col: str, id_col: str,
@@ -64,7 +60,7 @@ def _gram_hashes(df: DataFrame, text_col: str, id_col: str,
     g = toks.select("id", grams.alias("_g"))
     return g.select(
         "id",
-        F.transform("_g", lambda s: _h60(F.concat(F.lit("win:"), s)))
+        F.transform("_g", lambda s: _md5_long(F.concat(F.lit("win:"), s)))
         .alias("hs"))
 
 

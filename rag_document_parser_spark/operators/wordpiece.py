@@ -56,6 +56,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
 
+from rag_document_parser_spark.operators.bpe import _apply_merge, _pairs
 from rag_document_parser_spark.operators.dedup import words
 
 __all__ = ["train_wordpiece", "wordpiece_vocab", "greedy_segment"]
@@ -70,22 +71,6 @@ def _symstr(word: Column) -> Column:
                     F.lit(" "))
 
 
-def _pairs(sym_df: DataFrame) -> DataFrame:
-    """(pair, cnt): adjacent-symbol pairs weighted by word-type count
-    (the ``bpe._pairs`` shape: staged bound attribute, short-row
-    guard, map-side-combinable groupBy)."""
-    ys = sym_df.select("c", F.split(F.trim("s"), " ").alias("y"))
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size("y") - 1),
-        lambda i: F.concat(F.element_at("y", i), F.lit(" "),
-                           F.element_at("y", i + 1)))
-    guarded = F.when(F.size("y") >= 2, grams).otherwise(
-        F.array().cast("array<string>"))
-    flat = (ys.select("c", F.explode_outer(guarded).alias("pair"))
-            .where(F.col("pair").isNotNull()))
-    return flat.groupBy("pair").agg(F.sum("c").alias("cnt"))
-
-
 def _sym_counts(sym_df: DataFrame) -> DataFrame:
     """(sym, scnt): individual symbol occurrences weighted by type
     count — the unigram denominators of the WordPiece score."""
@@ -93,11 +78,6 @@ def _sym_counts(sym_df: DataFrame) -> DataFrame:
                           .alias("sym"))
             .where(F.col("sym").isNotNull()))
     return flat.groupBy("sym").agg(F.sum("c").alias("scnt"))
-
-
-def _apply_merge(s: Column, left: str, right: str) -> Column:
-    return F.replace(s, F.lit(f" {left} {right} "),
-                     F.lit(f" {left}{right} "))
 
 
 def train_wordpiece(df: DataFrame, text_col: str = "text",

@@ -18,18 +18,94 @@ Design notes:
 - ``stream_extract_with_lineage`` uses ``foreachBatch`` to reuse the exact
   batch write path (bucket dirs + lineage rows) per micro-batch — each
   micro-batch commit is the streaming analog of one resumable batch run.
+- the running-state faces (token sketch, group mass, Bloom bits, recrawl
+  state) are plain streaming aggregations: their merge laws (max, sum,
+  min/max, set union) are algebraic, so Spark's checkpointed state store
+  holds the running state and a replayed micro-batch reloads the state
+  version before it — no double count. ``_publish`` copies the whole
+  aggregate to ``output_dir/<name>`` after every micro-batch, so readers
+  see plain parquet. The KMV source sketch is the one hand-written merge
+  (Spark has no bounded bottom-k aggregate); see ``stream_source_sketch``.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, functions as F
+from pyspark.sql import SparkSession, functions as F, types as T
+from pyspark.sql.streaming.state import GroupStateTimeout
 
 from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.plans.job import bucket_col, doc_hash_col, extract
 from rag_document_parser_spark.schema import INPUT_SCHEMA
 from rag_document_parser_spark.session import skip_unchanged_zip_reloads
+
+def _start(writer, output_dir: str):
+    """Checkpoint under ``output_dir/_checkpoint``; drain what is new
+    (``availableNow``), then stop. Returns the started query."""
+    return (writer
+            .option("checkpointLocation",
+                    os.path.join(output_dir, "_checkpoint"))
+            .trigger(availableNow=True)
+            .start())
+
+
+def _append(df, output_dir: str):
+    """Append-mode parquet sink at ``output_dir/data``."""
+    return _start(df.writeStream.format("parquet")
+                  .option("path", os.path.join(output_dir, "data"))
+                  .outputMode("append"), output_dir)
+
+
+def _publish(agg, output_dir: str, name: str):
+    """Complete-mode sink for a running streaming aggregate: after every
+    micro-batch, overwrite ``output_dir/<name>`` with the WHOLE aggregate.
+
+    The aggregate itself lives in the checkpointed state store, never in
+    the published table, so nothing here reads the path it overwrites
+    and nothing is collected to the driver. A micro-batch replayed after
+    a crash recomputes from the state version before it and re-publishes
+    the same table. The aggregate is materialized (``localCheckpoint``)
+    BEFORE the overwrite starts deleting the old table, so a micro-batch
+    that fails — say, on a checkpoint whose state store is missing —
+    leaves the previous table in place. The overwrite itself is not
+    atomic: a reader racing it, or a crash inside it, sees a missing or
+    partial table until the next (or replayed) micro-batch publishes.
+    """
+    path = os.path.join(output_dir, name)
+
+    def write(batch_df, _batch_id):
+        batch_df.localCheckpoint().coalesce(1).write.mode("overwrite") \
+            .parquet(path)
+
+    return _start(agg.writeStream.outputMode("complete").foreachBatch(write),
+                  output_dir)
+
+
+def _docs_stream(spark: SparkSession, input_dir: str,
+                 max_files_per_trigger: int = 1):
+    """The documents table the sketch, mass, Bloom and KMV faces read."""
+    return (spark.readStream
+            .schema("doc_id long, text string, lang string, source string, "
+                    "n_chars long")
+            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .parquet(input_dir))
+
+
+def _extract_deduped(spark: SparkSession, input_dir: str,
+                     cfg: ExtractConfig, watermark: str):
+    """``ingest_ts``-stamped input → watermark-bounded exact dedup on the
+    raw span array → Arrow kernel."""
+    schema = T.StructType(
+        list(INPUT_SCHEMA.fields)
+        + [T.StructField("ingest_ts", T.TimestampType())])
+    stream = spark.readStream.schema(schema).parquet(input_dir)
+    deduped = (
+        stream.withColumn("doc_hash", F.xxhash64("spans"))
+        .withWatermark("ingest_ts", watermark)
+        .dropDuplicatesWithinWatermark(["doc_hash"])
+    )
+    return extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
 
 
 def stream_extract(
@@ -37,7 +113,6 @@ def stream_extract(
     input_dir: str,
     output_dir: str,
     cfg: ExtractConfig = DEFAULT_CONFIG,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """File-source stream → Arrow kernel → parquet sink. Returns the query.
@@ -50,16 +125,7 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    out = extract(stream, cfg, chunk=False)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _append(extract(stream, cfg, chunk=False), output_dir)
 
 
 def stream_extract_dedup_unbounded(
@@ -91,14 +157,7 @@ def stream_extract_dedup_unbounded(
             F.xxhash64(F.col("spans_clean")))  # content only: clones under
         .dropDuplicates(["doc_hash"])          # new doc_ids still dedupe
     )
-    return (
-        deduped.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(deduped, output_dir)
 
 
 def stream_extract_dedup_bounded(
@@ -125,26 +184,8 @@ def stream_extract_dedup_bounded(
     duplicate after extracting it would waste the extraction work, and
     xxhash64 of the nested array costs far less than the kernel.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        list(INPUT_SCHEMA.fields)
-        + [T.StructField("ingest_ts", T.TimestampType())])
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    deduped = (
-        stream.withColumn("doc_hash", F.xxhash64("spans"))
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark(["doc_hash"])
-    )
-    out = extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
-    return (
-        out.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(_extract_deduped(spark, input_dir, cfg, watermark),
+                   output_dir)
 
 
 # The unsuffixed name is the production-shaped (state-bounded) variant:
@@ -172,21 +213,10 @@ def stream_curate(
     dedup beyond the watermark window) are inherently batch — run
     ``plans.curate`` over the accumulated sink periodically for those.
     """
-    from pyspark.sql import types as T
-
     from rag_document_parser_spark.operators.pii import PII_RULES, redact_pii
     from rag_document_parser_spark.operators.textstats import quality_exprs
 
-    schema = T.StructType(
-        list(INPUT_SCHEMA.fields)
-        + [T.StructField("ingest_ts", T.TimestampType())])
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    deduped = (
-        stream.withColumn("doc_hash", F.xxhash64("spans"))
-        .withWatermark("ingest_ts", watermark)
-        .dropDuplicatesWithinWatermark(["doc_hash"])
-    )
-    out = extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
+    out = _extract_deduped(spark, input_dir, cfg, watermark)
     doc = out.select(
         "doc_id", "route", "title", "success",
         F.array_join(F.col("spans_clean").getField("text"), "\n\n")
@@ -199,14 +229,7 @@ def stream_curate(
     n_pii = sum(F.col(f"n_{name}") for name, _, _ in PII_RULES)
     final = red.select("doc_id", n_pii.cast("long").alias("n_pii"),
                        F.col("redacted").alias("content"))
-    return (
-        final.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(final, output_dir)
 
 
 def stream_windowed_event_counts(
@@ -226,8 +249,6 @@ def stream_windowed_event_counts(
     (event_id long, ts timestamp, user_id long, event_type string,
     value double) — the driver ``events`` table shape.
     """
-    from pyspark.sql import types as T
-
     schema = T.StructType([
         T.StructField("event_id", T.LongType()),
         T.StructField("ts", T.TimestampType()),
@@ -246,14 +267,7 @@ def stream_windowed_event_counts(
                 F.col("w.end").alias("window_end"),
                 "event_type", "n_events", "sum_value_cents")
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(agg, output_dir)
 
 
 def stream_shard_progress(
@@ -275,9 +289,6 @@ def stream_shard_progress(
     arbitrary-stateful form the built-in dropDuplicates/window aggs can't
     express: monotone cross-batch accumulators with custom update logic.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     out_schema = T.StructType([
         T.StructField("shard", T.IntegerType()),
         T.StructField("batch_docs", T.LongType()),
@@ -317,14 +328,7 @@ def stream_shard_progress(
     counted = staged.groupBy("shard").applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    return (
-        counted.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(counted, output_dir)
 
 
 def stream_extract_with_lineage(
@@ -358,12 +362,7 @@ def stream_extract_with_lineage(
 
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
     out = extract(stream, cfg, chunk=False)
-    return (
-        out.writeStream.foreachBatch(commit_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _start(out.writeStream.foreachBatch(commit_batch), output_dir)
 
 
 def stream_token_sketch(
@@ -375,56 +374,24 @@ def stream_token_sketch(
     """Running HyperLogLog distinct-token registers over a growing
     documents directory — the streaming face of the sketch tier.
 
-    Each micro-batch computes its own per-language register table
-    (64 rows/language, operators/sketches.hll_registers) and MAX-merges
-    it into the persisted state at ``output_dir/registers`` — the HLL
-    merge law (test_hll_registers_merge_by_max) is what makes the
-    accumulated state equal the registers of everything ever streamed,
-    regardless of batch boundaries. State is fixed-size by construction
-    (registers, never tokens), so the driver-side rewrite per batch is
-    O(languages × 64) rows — the one case where collecting is the
-    design, not a shortcut. ``availableNow`` + ``maxFilesPerTrigger``
-    drains the backlog in bounded batches and stops.
+    The per-language register table (64 rows/language,
+    operators/sketches.hll_registers) is a MAX aggregate, so it runs as
+    a streaming aggregation: the state store keeps the running
+    registers, and the HLL merge law (test_hll_registers_merge_by_max)
+    makes them equal the registers of everything ever streamed,
+    regardless of batch boundaries. ``_publish`` writes them to
+    ``output_dir/registers`` after every micro-batch. State is
+    fixed-size by construction (registers, never tokens).
+    ``availableNow`` + ``maxFilesPerTrigger`` drains the backlog in
+    bounded batches and stops.
     """
-    from pyspark.sql import types as T
-
     from rag_document_parser_spark.operators.dedup import words
     from rag_document_parser_spark.operators.sketches import hll_registers
 
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    state_path = os.path.join(output_dir, "registers")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-
-    def merge_batch(batch_df, _batch_id):
-        toks = batch_df.select(
-            "lang", F.explode(words(F.col("text"))).alias("term"))
-        regs = hll_registers(toks, group_cols=("lang",))
-        if os.path.isdir(state_path):
-            prev = spark.read.parquet(state_path)
-            regs = (prev.unionByName(regs)
-                    .groupBy("lang", "bucket").agg(F.max("rho").alias("rho")))
-        # registers are the fixed-size state: materialize driver-side
-        # (<= 64 x languages rows) and rewrite, so the overwrite never
-        # races the read of the same path
-        rows = regs.collect()
-        if rows:
-            spark.createDataFrame(rows, regs.schema).coalesce(1) \
-                .write.mode("overwrite").parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _docs_stream(spark, input_dir, max_files_per_trigger)
+    toks = stream.select("lang", F.explode(words(F.col("text"))).alias("term"))
+    return _publish(hll_registers(toks, group_cols=("lang",)),
+                    output_dir, "registers")
 
 
 def stream_sessionize(
@@ -459,9 +426,6 @@ def stream_sessionize(
     micro-batch) and its cure (upstream per-entity capping, never
     salting) are the batch operator's, documented there.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     events_schema = T.StructType([
         T.StructField("event_id", T.LongType()),
         T.StructField("ts", T.TimestampType()),
@@ -535,14 +499,7 @@ def stream_sessionize(
     sessions = stream.groupBy("user_id").applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.EventTimeTimeout)
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(sessions, output_dir)
 
 
 def stream_group_mass(
@@ -556,53 +513,21 @@ def stream_group_mass(
     """Running per-group corpus mass over a growing documents directory
     — the streaming face of the mixture tier.
 
-    Each micro-batch aggregates to its own ``(group, n_docs, mass)``
-    table and SUM-merges it into the persisted state at
-    ``output_dir/mass`` (counts and masses are plain sums, so the
-    merged state equals a batch aggregate over everything ever
-    streamed, regardless of batch boundaries — the same merge-law
-    argument as ``stream_token_sketch``'s MAX-merge). Feeding the state
-    to ``operators.mixture.weights_from_mass`` then yields EXACTLY the
+    ``(group, n_docs, mass)`` is a count/sum streaming aggregation: the
+    state store keeps the running sums, so the table ``_publish`` writes
+    to ``output_dir/mass`` after every micro-batch equals a batch
+    aggregate over everything ever streamed, regardless of batch
+    boundaries or replays. Feeding it to
+    ``operators.mixture.weights_from_mass`` then yields EXACTLY the
     tempered shares a batch ``temperature_weights`` would compute over
-    the full corpus — the test pins that equality. State is
-    |groups| rows; the driver-side rewrite per batch is the one case
-    where collecting is the design, not a shortcut.
+    the full corpus — the test pins that equality. State is |groups|
+    rows.
     """
-    from pyspark.sql import types as T
-
-    schema = T.StructType([
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("text", T.StringType()),
-        T.StructField("lang", T.StringType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_chars", T.LongType()),
-    ])
-    state_path = os.path.join(output_dir, "mass")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", str(max_files_per_trigger))
-              .parquet(input_dir))
-
-    def merge_batch(batch_df, _batch_id):
-        per = (batch_df.groupBy(F.col(group_col).alias("group"))
-               .agg(F.count("*").alias("n_docs"),
-                    F.sum(F.col(size_col)).cast("long").alias("mass")))
-        if os.path.isdir(state_path):
-            prev = spark.read.parquet(state_path)
-            per = (prev.unionByName(per)
-                   .groupBy("group")
-                   .agg(F.sum("n_docs").alias("n_docs"),
-                        F.sum("mass").alias("mass")))
-        rows = per.collect()
-        if rows:
-            spark.createDataFrame(rows, per.schema).coalesce(1) \
-                .write.mode("overwrite").parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _docs_stream(spark, input_dir, max_files_per_trigger)
+    mass = (stream.groupBy(F.col(group_col).alias("group"))
+            .agg(F.count("*").alias("n_docs"),
+                 F.sum(F.col(size_col)).cast("long").alias("mass")))
+    return _publish(mass, output_dir, "mass")
 
 
 def stream_integrity_ledger(
@@ -629,8 +554,7 @@ def stream_integrity_ledger(
     pre-shuffle projection; the stateful Python op only folds int64
     xors per bucket — one vectorized reduce per batch-group.
     """
-    from pyspark.sql import types as T
-    from pyspark.sql.streaming.state import GroupStateTimeout
+    from rag_document_parser_spark.operators.dedup import _md5_long
 
     out_schema = T.StructType([
         T.StructField("idx", T.LongType()),
@@ -665,24 +589,16 @@ def stream_integrity_ledger(
             "xor_digest": [tx],
             "node_hash": [hashlib.md5(str(tx).encode()).hexdigest()]})
 
-    u60 = ("cast(conv(substring(md5({c}), 1, 15), 16, 10) as long)")
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
     staged = stream.select(
-        F.expr(u60.format(c="concat(doc_id, 'mk')"))
-        .__mod__(n_buckets).cast("long").alias("idx"),
-        F.expr(u60.format(
-            c="concat(doc_id, '\\u001f', to_json(spans))")).alias("h"))
+        (_md5_long(F.concat("doc_id", F.lit("mk"))) % n_buckets)
+        .cast("long").alias("idx"),
+        _md5_long(F.concat("doc_id", F.lit("\x1f"), F.to_json("spans")))
+        .alias("h"))
     ledger = staged.groupBy("idx").applyInPandasWithState(
         update, out_schema, state_schema, "append",
         GroupStateTimeout.NoTimeout)
-    return (
-        ledger.writeStream.format("parquet")
-        .option("path", os.path.join(output_dir, "data"))
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _append(ledger, output_dir)
 
 
 def stream_bloom_state(
@@ -694,15 +610,17 @@ def stream_bloom_state(
 ):
     """Streaming face of the Bloom decontamination filter: the eval
     set GROWS (new benchmarks land over time), so the filter's set-bit
-    positions are maintained incrementally — each micro-batch builds
-    the batch's shingle Bloom and UNION-DISTINCT-merges it into the
-    persisted state at ``output_dir/bloom`` (the merge law
-    ``bloom_build`` documents: filters with identical geometry merge
-    by union). Bit-setting is idempotent and commutative, so after
-    draining any split of the eval corpus the state EQUALS the batch
-    ``bloom_build`` over everything ever streamed (test-pinned), and
-    ``bloom_decontaminate``'s broadcast-semi-join chain can read the
-    state table directly in place of a freshly built filter.
+    positions are maintained incrementally. The set-bit table is a
+    streaming aggregation keyed on ``pos`` (the merge law
+    ``bloom_build`` documents: filters with identical geometry merge by
+    union), held in the state store and published to
+    ``output_dir/bloom`` after every micro-batch. Bit-setting is
+    idempotent and commutative, so after draining any split of the eval
+    corpus the state EQUALS the batch ``bloom_build`` over everything
+    ever streamed (test-pinned), and ``bloom_decontaminate``'s
+    broadcast-semi-join chain can read the state table directly in
+    place of a freshly built filter. (``groupBy(pos)`` rather than
+    ``distinct``: complete mode needs an aggregation.)
 
     State is bounded by ``m_bits`` rows regardless of how much eval
     data ever streams — the property that makes the Bloom form the
@@ -713,30 +631,11 @@ def stream_bloom_state(
     from rag_document_parser_spark.operators.bloom import bloom_build
     from rag_document_parser_spark.operators.dedup import word_shingles
 
-    schema = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
-    state_path = os.path.join(output_dir, "bloom")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(input_dir))
-
-    def merge_batch(batch_df, _batch_id):
-        sh = batch_df.select(
-            F.explode(word_shingles(F.col("text"), n)).alias("term"))
-        delta = bloom_build(sh, m_bits=m_bits)
-        if os.path.isdir(state_path):
-            prev = spark.read.parquet(state_path)
-            delta = prev.unionByName(delta).distinct()
-        rows = delta.collect()
-        if rows:
-            spark.createDataFrame(rows, delta.schema).coalesce(1) \
-                .write.mode("overwrite").parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _docs_stream(spark, input_dir)
+    sh = stream.select(
+        F.explode(word_shingles(F.col("text"), n)).alias("term"))
+    bits = bloom_build(sh, m_bits=m_bits).groupBy("pos").count().select("pos")
+    return _publish(bits, output_dir, "bloom")
 
 
 def stream_source_sketch(
@@ -755,19 +654,21 @@ def stream_source_sketch(
     (test-pinned). ``corpstats.overlap_from_sketches`` reads the state
     directly for the pairwise Jaccard matrix.
 
-    State is bounded by sources × k rows forever — like the HLL
-    registers and the Bloom bits, the sketch (not the corpus) is the
-    state, which is what makes driver-side rewrite per batch the
-    design rather than a shortcut.
+    The one hand-written merge in this module: Spark has no bounded
+    bottom-k aggregate for the state store to hold, so the state is the
+    published table itself. It is bounded by sources × k rows, and it is
+    collected to the driver before the rewrite so the overwrite never
+    races the read of the same path. The merge is idempotent (a hash
+    already in the bottom-k stays, once), so a replayed micro-batch
+    cannot double-count. The overwrite is NOT atomic: a crash after it
+    has deleted the old table and before the new one is written loses
+    the state, and the replayed batch then rebuilds it from that batch
+    alone.
     """
     from rag_document_parser_spark.operators.corpstats import (
         merge_source_sketches, source_sketch)
 
-    schema = ("doc_id long, text string, lang string, source string, "
-              "n_chars long")
     state_path = os.path.join(output_dir, "sketch")
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", "1").parquet(input_dir))
 
     def merge_batch(batch_df, _batch_id):
         delta = source_sketch(batch_df, k=k)
@@ -779,12 +680,8 @@ def stream_source_sketch(
             spark.createDataFrame(rows, delta.schema).coalesce(1) \
                 .write.mode("overwrite").parquet(state_path)
 
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    stream = _docs_stream(spark, input_dir)
+    return _start(stream.writeStream.foreachBatch(merge_batch), output_dir)
 
 
 def stream_recrawl_state(
@@ -800,57 +697,34 @@ def stream_recrawl_state(
     the streaming face of ``operators.frontier.recrawl_schedule``.
 
     The batch operator's per-entity quantities ``(n_obs, n_changed,
-    first_us, last_us)`` are algebraic (sum/sum/min/max), so each
-    micro-batch's partial merges into the persisted state at
-    ``output_dir/state`` by the same laws — the merged state equals a
-    batch aggregate over every fetch ever streamed regardless of batch
-    boundaries (the ``stream_group_mass`` merge-law argument).
+    first_us, last_us)`` are algebraic (count/sum/min/max), so they run
+    as one streaming aggregation: the state store keeps the running
+    values, and the table ``_publish`` writes to ``output_dir/state``
+    after every micro-batch equals a batch aggregate over every fetch
+    ever streamed, regardless of batch boundaries or replays.
     ``recrawl_from_state`` then applies the identical closed-form
     interval arithmetic, so the streamed schedule is bit-equal to
     batch ``recrawl_schedule`` on the union — the test pins it. State
     is |urls| fixed-width rows.
     """
-    from pyspark.sql import types as T
-
     schema = T.StructType([
         T.StructField(id_col, T.LongType()),
         T.StructField(ts_col, T.TimestampType()),
         T.StructField(changed_col, T.BooleanType()),
     ])
-    state_path = os.path.join(output_dir, "state")
     stream = (spark.readStream.schema(schema)
               .option("maxFilesPerTrigger", str(max_files_per_trigger))
               .parquet(input_dir))
-
-    def merge_batch(batch_df, _batch_id):
-        per = (batch_df.select(
-            F.col(id_col).alias("url_id"),
-            F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"),
-            F.col(changed_col).cast("long").alias("_ch"))
-            .groupBy("url_id")
-            .agg(F.count("*").alias("n_obs"),
-                 F.sum("_ch").alias("n_changed"),
-                 F.min("_us").alias("first_us"),
-                 F.max("_us").alias("last_us")))
-        if os.path.isdir(state_path):
-            prev = spark.read.parquet(state_path)
-            per = (prev.unionByName(per)
-                   .groupBy("url_id")
-                   .agg(F.sum("n_obs").alias("n_obs"),
-                        F.sum("n_changed").alias("n_changed"),
-                        F.min("first_us").alias("first_us"),
-                        F.max("last_us").alias("last_us")))
-        rows = per.collect()
-        if rows:
-            spark.createDataFrame(rows, per.schema).coalesce(1) \
-                .write.mode("overwrite").parquet(state_path)
-
-    return (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", os.path.join(output_dir, "_checkpoint"))
-        .trigger(availableNow=True)
-        .start()
-    )
+    state = (stream.select(
+        F.col(id_col).alias("url_id"),
+        F.unix_micros(F.col(ts_col).cast("timestamp")).alias("_us"),
+        F.col(changed_col).cast("long").alias("_ch"))
+        .groupBy("url_id")
+        .agg(F.count("*").alias("n_obs"),
+             F.sum("_ch").alias("n_changed"),
+             F.min("_us").alias("first_us"),
+             F.max("_us").alias("last_us")))
+    return _publish(state, output_dir, "state")
 
 
 def recrawl_from_state(spark: SparkSession, output_dir: str,

@@ -719,3 +719,96 @@ def test_stream_recrawl_state_matches_batch_schedule(spark, tmp_path):
         spark.createDataFrame(batch_a + batch_b, schema),
         min_interval_s=3600, max_interval_s=86_400).collect()))
     assert got == want and len(got) == 3
+
+
+def _replay_faces():
+    """face -> (stream fn, published state dir, input schema, the two
+    input files, the batch aggregate of their union)."""
+    from datetime import datetime
+
+    from rag_document_parser_spark.operators.bloom import bloom_build
+    from rag_document_parser_spark.operators.corpstats import source_sketch
+    from rag_document_parser_spark.operators.dedup import (
+        word_shingles, words)
+    from rag_document_parser_spark.operators.sketches import hll_registers
+    from rag_document_parser_spark.streaming import incremental as inc
+
+    docs = ("doc_id long, text string, lang string, source string, "
+            "n_chars long")
+    # 'en' lands in both files, so a re-merged batch shows in every face
+    doc_parts = (
+        [(i, f"alpha beta tok{i} gamma delta", "en", "srcP", 20 + i % 7)
+         for i in range(30)],
+        [(100 + i, f"un deux mot{i} trois quatre", "fr", "srcQ", 12 + i % 3)
+         for i in range(20)]
+        + [(200 + i, f"alpha beta tok{i} gamma delta", "en", "srcQ", 20)
+           for i in range(5)])
+    fetches = "url_id long, ts timestamp, changed boolean"
+
+    def t(h):
+        return datetime(2024, 3, 1, h)
+
+    fetch_parts = ([(1, t(0), False), (1, t(1), True), (2, t(0), False)],
+                   [(1, t(2), False), (1, t(5), True), (2, t(3), False)])
+
+    def toks(w):
+        return w.select("lang", F.explode(words(F.col("text"))).alias("term"))
+
+    return {
+        "token_sketch": (
+            inc.stream_token_sketch, "registers", docs, doc_parts,
+            lambda w: hll_registers(toks(w), group_cols=("lang",))),
+        "group_mass": (
+            inc.stream_group_mass, "mass", docs, doc_parts,
+            lambda w: w.groupBy(F.col("lang").alias("group")).agg(
+                F.count("*").alias("n_docs"),
+                F.sum("n_chars").alias("mass"))),
+        "bloom_state": (
+            inc.stream_bloom_state, "bloom", docs, doc_parts,
+            lambda w: bloom_build(w.select(F.explode(
+                word_shingles(F.col("text"), 3)).alias("term")))),
+        "source_sketch": (
+            inc.stream_source_sketch, "sketch", docs, doc_parts,
+            lambda w: source_sketch(w, k=128)),
+        "recrawl_state": (
+            inc.stream_recrawl_state, "state", fetches, fetch_parts,
+            lambda w: w.select(
+                "url_id", F.unix_micros("ts").alias("us"),
+                F.col("changed").cast("long").alias("ch"))
+            .groupBy("url_id").agg(
+                F.count("*").alias("n_obs"), F.sum("ch").alias("n_changed"),
+                F.min("us").alias("first_us"),
+                F.max("us").alias("last_us"))),
+    }
+
+
+@pytest.mark.parametrize("face", ["token_sketch", "group_mass",
+                                  "bloom_state", "source_sketch",
+                                  "recrawl_state"])
+def test_stream_state_replay_is_exactly_once(spark, tmp_path, face):
+    """A crash between a micro-batch's state write and its checkpoint
+    commit leaves ``offsets/<id>`` without ``commits/<id>``, and the
+    restart replays batch <id>. The published state must still equal
+    the batch aggregate of the union: the replay must not fold the
+    batch in a second time."""
+    run, state_dir, schema, parts, batch_agg = _replay_faces()[face]
+    in_dir = str(tmp_path / "in")
+    out_dir = str(tmp_path / "out")
+    for rows in parts:
+        spark.createDataFrame(rows, schema).coalesce(1) \
+            .write.mode("append").parquet(in_dir)
+    run(spark, in_dir, out_dir).awaitTermination(120)
+
+    commits = os.path.join(out_dir, "_checkpoint", "commits")
+    last = max(int(f) for f in os.listdir(commits) if f.isdigit())
+    assert last == 1  # one micro-batch per input file
+    os.remove(os.path.join(commits, str(last)))
+    crc = os.path.join(commits, f".{last}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    run(spark, in_dir, out_dir).awaitTermination(120)
+
+    want = batch_agg(spark.createDataFrame(parts[0] + parts[1], schema))
+    got = spark.read.parquet(os.path.join(out_dir, state_dir))
+    assert sorted(map(tuple, got.select(*want.columns).collect())) == \
+        sorted(map(tuple, want.collect()))
