@@ -8460,107 +8460,6 @@ FROM parsed"""
 SQL_DOC_METADATA = _sql_doc_metadata()
 
 
-def q_orders_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2/A9-shaped group-by report on the orders table."""
-    orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    cents = F.floor(F.col("o_totalprice") * 100)
-    return orders.groupBy("o_orderstatus").agg(
-        F.count("*").alias("n_orders"),
-        F.sum(cents).cast("long").alias("sum_cents"),
-        F.min(cents).cast("long").alias("min_cents"),
-        F.max(cents).cast("long").alias("max_cents"))
-
-
-SQL_ORDERS = """
-SELECT o_orderstatus, count(*)::BIGINT AS n_orders,
-  sum(floor(o_totalprice * 100))::BIGINT AS sum_cents,
-  min(floor(o_totalprice * 100))::BIGINT AS min_cents,
-  max(floor(o_totalprice * 100))::BIGINT AS max_cents
-FROM orders GROUP BY o_orderstatus"""
-
-
-def q_lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9-family scan-heavy report on the largest driver table (classic
-    pricing-summary shape): date-filtered groupBy with floor-scaled
-    integer money so double sums stay order-independent. The filter and
-    5-column projection push into the parquet scan."""
-    l = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    disc = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                   * 100).cast("long")
-    charge = F.floor(F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                     * (1 + F.col("l_tax")) * 100).cast("long")
-    return (l.where(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00")
-                    .cast("timestamp"))
-            .groupBy("l_returnflag", "l_linestatus")
-            .agg(F.sum(F.floor(F.col("l_quantity") * 100).cast("long"))
-                 .alias("sum_qty_e2"),
-                 F.sum(F.floor(F.col("l_extendedprice") * 100).cast("long"))
-                 .alias("sum_base_cents"),
-                 F.sum(disc).alias("sum_disc_cents"),
-                 F.sum(charge).alias("sum_charge_cents"),
-                 F.count("*").alias("n_rows")))
-
-
-SQL_LINEITEM_PRICING = """
-SELECT l_returnflag, l_linestatus,
-  sum(floor(l_quantity * 100)::BIGINT)::BIGINT AS sum_qty_e2,
-  sum(floor(l_extendedprice * 100)::BIGINT)::BIGINT AS sum_base_cents,
-  sum(floor(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-    AS sum_disc_cents,
-  sum(floor(l_extendedprice * (1 - l_discount) * (1 + l_tax)
-            * 100)::BIGINT)::BIGINT AS sum_charge_cents,
-  count(*)::BIGINT AS n_rows
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus"""
-
-
-_Q3_CUT = "1998-06-01 00:00:00"
-
-
-def q_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shape — the canonical 3-way join: segment-filtered
-    customer (small side, broadcast) ⋈ date-filtered orders ⋈
-    shipped-after lineitem, revenue in floor-scaled cents, top-10 by
-    (revenue DESC, orderkey ASC — a deterministic total order). Both
-    filters and the slim projections push into the parquet scans; the
-    one big shuffle keys on the uniform orderkey."""
-    cut = F.lit(_Q3_CUT).cast("timestamp")
-    c = (spark.read.parquet(f"{sf_dir}/customer.parquet")
-         .where(F.col("c_mktsegment") == "BUILDING").select("c_custkey"))
-    o = (spark.read.parquet(f"{sf_dir}/orders.parquet")
-         .where(F.col("o_orderdate") < cut)
-         .select("o_orderkey", "o_custkey", "o_orderdate"))
-    l = (spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-         .where(F.col("l_shipdate") > cut)
-         .select("l_orderkey",
-                 F.floor(F.col("l_extendedprice")
-                         * (1 - F.col("l_discount")) * 100)
-                 .cast("long").alias("rev_cents")))
-    j = (l.join(o, l["l_orderkey"] == o["o_orderkey"])
-         .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey")))
-    return (j.groupBy("l_orderkey", "o_orderdate")
-            .agg(F.sum("rev_cents").alias("revenue_cents"))
-            .orderBy(F.desc("revenue_cents"), F.asc("l_orderkey"))
-            .limit(10)
-            .select("l_orderkey",
-                    F.date_format("o_orderdate", "yyyy-MM-dd")
-                    .alias("order_date"), "revenue_cents"))
-
-
-SQL_SHIPPING_PRIORITY = f"""
-SELECT l_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS order_date,
-       sum(floor(l_extendedprice * (1 - l_discount) * 100)::BIGINT)::BIGINT
-         AS revenue_cents
-FROM customer, orders, lineitem
-WHERE c_mktsegment = 'BUILDING'
-  AND c_custkey = o_custkey AND l_orderkey = o_orderkey
-  AND o_orderdate < TIMESTAMP '{_Q3_CUT}'
-  AND l_shipdate > TIMESTAMP '{_Q3_CUT}'
-GROUP BY l_orderkey, o_orderdate
-ORDER BY revenue_cents DESC, l_orderkey ASC LIMIT 10"""
-
-
 def q_bucket_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-flight bucket-skew diagnostic (reporting.bucket_skew_report):
     per-md5-bucket doc count + byte mass + skew ratio against a
@@ -8583,128 +8482,6 @@ WITH per AS (
 SELECT bucket::BIGINT AS bucket, n_docs, weight_total,
        (weight_total * 64 * 1000000 // t)::BIGINT AS skew_e6
 FROM per, tot"""
-
-
-def q_events_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A13-shaped type stats on the events stream table."""
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return events.groupBy("event_type").agg(
-        F.count("*").alias("n_events"),
-        F.sum(F.floor(F.col("value") * 100)).cast("long").alias("sum_value_cents"),
-        F.countDistinct("user_id").cast("long").alias("n_users"))
-
-
-SQL_EVENTS = """
-SELECT event_type, count(*)::BIGINT AS n_events,
-  sum(floor(value * 100))::BIGINT AS sum_value_cents,
-  count(DISTINCT user_id)::BIGINT AS n_users
-FROM events GROUP BY event_type"""
-
-
-_FUNNEL = ["view", "click", "signup", "purchase"]
-
-
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict ordered-funnel conversion over the events stream:
-    view → click → signup → purchase, the per-entity replay fold
-    advancing only on the exact next step."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return EV.funnel_counts(events, _FUNNEL)
-
-
-SQL_FUNNEL = f"""
-WITH st AS (
-  SELECT user_id AS u, epoch_us(ts) AS ts_us, event_id,
-    CASE event_type WHEN 'view' THEN 1 WHEN 'click' THEN 2
-         WHEN 'signup' THEN 3 WHEN 'purchase' THEN 4 END AS s
-  FROM events
-  WHERE event_type IN ('view', 'click', 'signup', 'purchase')
-), pu AS (
-  SELECT u, list(s ORDER BY ts_us, event_id) AS ev FROM st GROUP BY u
-), r AS (
-  SELECT list_reduce(list_prepend(0, ev),
-          (a, e) -> CASE WHEN e = a + 1 THEN a + 1 ELSE a END) AS reach
-  FROM pu
-), dist AS (
-  SELECT reach, count(*)::BIGINT AS n FROM r GROUP BY reach
-), frame AS (
-  SELECT unnest(range(1, 5)) AS step_idx
-), ps AS (
-  SELECT f.step_idx, coalesce(d.n, 0) AS n
-  FROM frame f LEFT JOIN dist d ON d.reach = f.step_idx
-), cum AS (
-  SELECT step_idx,
-    sum(n) OVER (ORDER BY step_idx DESC
-      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)::BIGINT
-      AS n_users
-  FROM ps
-), fin AS (
-  SELECT step_idx, n_users,
-    lag(n_users) OVER (ORDER BY step_idx) AS prev,
-    first_value(n_users) OVER (ORDER BY step_idx) AS fst
-  FROM cum
-)
-SELECT step_idx::BIGINT AS step_idx,
-  ['view', 'click', 'signup', 'purchase'][step_idx] AS step, n_users,
-  (n_users * 1000000 // nullif(prev, 0))::BIGINT AS conv_from_prev_e6,
-  (n_users * 1000000 // nullif(fst, 0))::BIGINT AS conv_from_first_e6
-FROM fin"""
-
-
-def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 2x2 chi-square A/B read-out over the events stream:
-    variant by user parity, conversion = the user ever purchased; the
-    determinant shortcut keeps the statistic rational end to end."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    users = (events.groupBy("user_id")
-             .agg(F.when(
-                 F.sum((F.col("event_type") == "purchase").cast("int"))
-                 >= 3, 1).otherwise(0).alias("converted"))
-             .select(F.when(F.col("user_id") % 2 == 0, F.lit("a"))
-                     .otherwise(F.lit("b")).alias("variant"),
-                     "converted"))
-    return EV.ab_test(users)
-
-
-SQL_AB_TEST = """
-WITH users AS (
-  SELECT CASE WHEN user_id % 2 = 0 THEN 'a' ELSE 'b' END AS variant,
-         CASE WHEN sum((event_type = 'purchase')::INT) >= 3
-              THEN 1 ELSE 0 END AS converted
-  FROM events GROUP BY user_id
-), cells AS (
-  SELECT
-    sum(CASE WHEN variant = 'a' THEN converted ELSE 0 END)::BIGINT AS a,
-    sum(CASE WHEN variant = 'a' THEN 1 - converted ELSE 0 END)::BIGINT
-      AS b,
-    sum(CASE WHEN variant <> 'a' THEN converted ELSE 0 END)::BIGINT
-      AS c,
-    sum(CASE WHEN variant <> 'a' THEN 1 - converted ELSE 0 END)::BIGINT
-      AS d
-  FROM users
-), s AS (
-  SELECT a, b, c, d,
-    (a::HUGEINT * d - b::HUGEINT * c) AS det
-  FROM cells
-)
-SELECT (a + b)::BIGINT AS n_a, (c + d)::BIGINT AS n_b,
-  a AS conv_a, c AS conv_b,
-  (a * 1000000 // nullif(a + b, 0))::BIGINT AS rate_a_e6,
-  (c * 1000000 // nullif(c + d, 0))::BIGINT AS rate_b_e6,
-  (CASE WHEN (a+b) > 0 AND (c+d) > 0 AND (a+c) > 0 AND (b+d) > 0
-        THEN (a+b+c+d)::HUGEINT * det * det * 1000000
-             // ((a+b)::HUGEINT * (c+d) * (a+c) * (b+d)) END)::BIGINT
-    AS chi2_e6,
-  coalesce(
-    CASE WHEN (a+b) > 0 AND (c+d) > 0 AND (a+c) > 0 AND (b+d) > 0
-         THEN (a+b+c+d)::HUGEINT * det * det * 1000000
-              // ((a+b)::HUGEINT * (c+d) * (a+c) * (b+d)) >= 3841000
-    END, false) AS significant_95
-FROM s"""
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8761,128 +8538,6 @@ WITH e0 AS (
 {_sql_lpa_round(1, 'l0')},
 {_sql_lpa_round(2, 'l1')}
 SELECT node::BIGINT AS node, c AS community FROM l2"""
-
-
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order event-type transition matrix over per-user
-    sequences: row-normalized fixed-point probabilities, deterministic
-    (ts, event_id) ordering."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return EV.event_transitions(events)
-
-
-SQL_EVENT_TRANSITIONS = """
-WITH s AS (
-  SELECT user_id AS u, epoch_us(ts) AS ts_us, event_id,
-         event_type AS t
-  FROM events
-), p AS (
-  SELECT t AS from_type,
-    lead(t) OVER (PARTITION BY u ORDER BY ts_us, event_id) AS to_type
-  FROM s
-), c AS (
-  SELECT from_type, to_type, count(*)::BIGINT AS n
-  FROM p WHERE to_type IS NOT NULL GROUP BY from_type, to_type
-), tot AS (
-  SELECT from_type, sum(n)::BIGINT AS tt FROM c GROUP BY from_type
-)
-SELECT c.from_type, c.to_type, c.n,
-  (c.n * 1000000 // t.tt)::BIGINT AS p_e6
-FROM c JOIN tot t USING (from_type)"""
-
-
-_RET_BUCKET_S = 86_400  # daily cohorts: the synthetic log spans days
-
-
-def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix over the events stream: entities
-    bucketed by first-seen day, per-offset active fraction in fixed
-    point."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return EV.cohort_retention(events, bucket_s=_RET_BUCKET_S,
-                               max_offset=12)
-
-
-_RET_US = _RET_BUCKET_S * 1_000_000
-SQL_COHORT_RETENTION = f"""
-WITH s AS (
-  SELECT user_id AS u, epoch_us(ts) AS ts_us FROM events
-), f AS (
-  SELECT u, min(ts_us) // {_RET_US} AS cb FROM s GROUP BY u
-), a AS (
-  SELECT DISTINCT u, ts_us // {_RET_US} AS ab FROM s
-), j AS (
-  SELECT cb, ab - cb AS off FROM a JOIN f USING (u)
-  WHERE ab - cb BETWEEN 0 AND 12
-), cs AS (
-  SELECT cb, count(*)::BIGINT AS cohort_size FROM f GROUP BY cb
-), c AS (
-  SELECT cb, off, count(*)::BIGINT AS n_active FROM j GROUP BY cb, off
-)
-SELECT cb::BIGINT AS cohort_bucket, off::BIGINT AS bucket_offset,
-  cohort_size, n_active,
-  (n_active * 1000000 // cohort_size)::BIGINT AS retention_e6
-FROM c JOIN cs USING (cb)"""
-
-
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (operators/events.py): 30-minute idle
-    gap over the events stream, per-session stats. One entity-keyed
-    exchange; lag + running sum share a single Window node."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return session_stats_cols(EV.session_stats(EV.sessionize(events)))
-
-
-def session_stats_cols(df: DataFrame) -> DataFrame:
-    return df.select("user", F.col("session_idx").cast("long"),
-                     F.col("n_events").cast("long"),
-                     "start_us", "end_us", "duration_s")
-
-
-SQL_SESSIONIZE = """
-WITH e AS (SELECT event_id, user_id AS user, epoch_us(ts) AS ts_us
-           FROM events),
-l AS (SELECT *, lag(ts_us) OVER (
-        PARTITION BY user ORDER BY ts_us, event_id) AS prev FROM e),
-n AS (SELECT *, CASE WHEN prev IS NULL OR ts_us - prev > 1800000000
-                THEN 1 ELSE 0 END AS nw FROM l),
-s AS (SELECT *, sum(nw) OVER (PARTITION BY user ORDER BY ts_us, event_id
-        ROWS UNBOUNDED PRECEDING) AS session_idx FROM n)
-SELECT user, session_idx::BIGINT AS session_idx,
-  count(*)::BIGINT AS n_events,
-  min(ts_us)::BIGINT AS start_us, max(ts_us)::BIGINT AS end_us,
-  ((max(ts_us) - min(ts_us)) // 1000000)::BIGINT AS duration_s
-FROM s GROUP BY user, session_idx"""
-
-
-def q_asof_purchase_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (operators/events.py asof_join): every purchase event
-    paired with the user's most recent click at or before it. The Spark
-    plan is UNION-AND-CARRY (one entity-keyed window, no range-join
-    blowup); the oracle is DuckDB's native ASOF JOIN — an independent
-    algorithm agreeing on the same semantics."""
-    from rag_document_parser_spark.operators import events as EV
-
-    events = spark.read.parquet(f"{sf_dir}/events.parquet")
-    out = EV.asof_join(events.where(F.col("event_type") == "purchase"),
-                       events.where(F.col("event_type") == "click"))
-    return out.select("event_id", "user", "ts_us",
-                      "asof_id", "asof_ts_us", "gap_us")
-
-
-SQL_ASOF_PURCHASE_CLICK = """
-SELECT l.event_id, l.user_id AS user, epoch_us(l.ts) AS ts_us,
-       r.event_id AS asof_id, epoch_us(r.ts) AS asof_ts_us,
-       epoch_us(l.ts) - epoch_us(r.ts) AS gap_us
-FROM (SELECT * FROM events WHERE event_type = 'purchase') l
-ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') r
-  ON l.user_id = r.user_id AND l.ts >= r.ts"""
 
 
 # ---------------------------------------------------------------------------
@@ -9508,37 +9163,35 @@ SELECT media_ref, modality, payload_sha, keeper_ref,
 FROM base JOIN groups USING (payload_sha)"""
 
 
-def _pixel_grids(spark: SparkSession):
+def _pixel_grids(spark: SparkSession) -> DataFrame:
     """Deterministic 72-cell grayscale grids standing in for decoded 9x8
     thumbnails (the decode step is container-stubbed; see
     operators/multimodal.py module docstring). Values are k/128 with k =
     (id*73 + j*37) % 101 — /128 is a power of two so the double is exact
-    and the DuckDB twin reproduces floor(x*1e6) bit-for-bit. Clones
-    1000..1005 are byte-identical re-hosts of grids 0..5 (hamming 0);
-    clones 1006..1011 bump ONE pixel of grids 6..11 by +0.25 (a re-encode
-    artifact: most ahash bits survive, the mean shift flips a few)."""
-    # selectExpr (SQL scoping) rather than python lambdas capturing an
-    # outer column: the capture + unionByName combination trips the
-    # analyzer (`key not found: id#N`). D-suffixed literals keep the
-    # arithmetic in DOUBLE (a bare 128.0 would be DECIMAL in Spark SQL).
-    base = spark.range(48).selectExpr(
-        "id",
-        "transform(sequence(0, 71),"
-        " j -> ((id*73 + j*37) % 101) / 128.0D) AS pixels")
-    clones = spark.range(12).selectExpr(
-        "id + 1000 AS id",
-        "transform(sequence(0, 71), j -> CASE"
-        " WHEN id >= 6 AND j = (id*5) % 72"
-        " THEN ((id*73 + j*37) % 101) / 128.0D + 0.25D"
-        " ELSE ((id*73 + j*37) % 101) / 128.0D END) AS pixels")
-    return base, clones
+    and the DuckDB twin reproduces floor(x*1e6) bit-for-bit. Base grids
+    are ids 0..47. Clones 1000..1005 are byte-identical re-hosts of grids
+    0..5 (hamming 0); clones 1006..1011 bump ONE pixel of grids 6..11 by
+    +0.25 (a re-encode artifact: most ahash bits survive, the mean shift
+    flips a few)."""
+    # One range, no Union: a Union of two range projections under the
+    # banded self-join trips the optimizer's PruneFilters (`key not
+    # found: id#N`) when it is the first plan of a session. selectExpr
+    # (SQL scoping) rather than python lambdas capturing an outer column
+    # for the same reason. D-suffixed literals keep the arithmetic in
+    # DOUBLE (a bare 128.0 would be DECIMAL in Spark SQL); x + 0.0D is x.
+    return spark.range(60).selectExpr(
+        "id < 48 AS is_base", "IF(id < 48, id, id - 48) AS i").selectExpr(
+        "IF(is_base, i, i + 1000) AS id",
+        "transform(sequence(0, 71), j -> ((i*73 + j*37) % 101) / 128.0D"
+        " + IF(NOT is_base AND i >= 6 AND j = (i*5) % 72, 0.25D, 0.0D))"
+        " AS pixels")
 
 
 def q_perceptual_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Both 64-bit perceptual hashes (aHash mean-threshold, dHash
     horizontal-gradient) per synthetic image grid — the LAION-style
     near-dup signature pass (operators/multimodal.py ahash64/dhash64)."""
-    base, _ = _pixel_grids(spark)
+    base = _pixel_grids(spark).where(F.col("id") < 1000)
     a = M.ahash64(base, pixels_col="pixels", id_col="id") \
         .withColumnRenamed("phash", "ahash")
     d = M.dhash64(base, pixels_col="pixels", id_col="id") \
@@ -9552,9 +9205,7 @@ def q_phash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     base grids plus planted exact/perturbed clones. Oracle does the exact
     O(n^2) hamming check — banding must surface the identical pair set
     (completeness for hamming <= 3)."""
-    base, clones = _pixel_grids(spark)
-    sig = M.ahash64(base.unionByName(clones), pixels_col="pixels",
-                    id_col="id")
+    sig = M.ahash64(_pixel_grids(spark), pixels_col="pixels", id_col="id")
     out = M.phash_near_pairs(sig, max_hamming=3)
     return out.select(F.col("id_a").cast("long"),
                       F.col("id_b").cast("long"),
@@ -10612,71 +10263,15 @@ FROM fields WHERE title IS NOT NULL OR link IS NOT NULL"""
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # ORDER MATTERS: the driver gates the FIRST ~50 entries per round.
-    # Round-5 rotation (VERDICT r4 task #1): ALL 81 queries that have
-    # never received a driver CORRECTNESS row in rounds 1-4 lead, with
-    # the two-round-stale seven first, then quality/curation, then
-    # retrieval/ANN, dedup, sketches, events, mixture, and the rest.
-    # Previously driver-gated queries (116, all green) form the tail in
-    # their prior relative order.
+    # Every query that no CORRECTNESS_r*.json round has gated leads, in
+    # its prior relative order (tests/test_entry_contract.py derives
+    # that set from the artifacts and pins it as the prefix): the 30
+    # the round-5 rotation did not reach, then the web-source tier added
+    # after it. One round of the driver then covers every query. The
+    # queries gated in rounds 1-5 (all green) form the tail in their
+    # prior relative order.
     return {
-        # -- never driver-gated (r1-r4): stale seven ----------------
-        "pdf_images": q_pdf_images,
-        "arabic_tables": q_arabic_tables,
-        "failed_docs_poisoned": q_failed_docs_poisoned,
-        "summary_poisoned": q_summary_poisoned,
-        "kmeans_centroids": q_kmeans_centroids,
-        "segment_audio": q_segment_audio,
-        "semdedup": q_semdedup,
-        # -- never gated: quality / curation tier -------------------
-        "gopher_rules": q_gopher_rules,
-        "c4_line_filter": q_c4_line_filter,
-        "remove_repeated": q_remove_repeated,
-        "dsir_select": q_dsir_select,
-        "quality_chain": q_quality_chain,
-        "leakage_split": q_leakage_split,
-        "ccnet_buckets": q_ccnet_buckets,
-        "fix_mojibake": q_fix_mojibake,
-        "sentence_dedup": q_sentence_dedup,
-        "toxicity_gate": q_toxicity_gate,
-        "readability": q_readability,
-        "keep_best": q_keep_best,
-        "soft_dedup": q_soft_dedup,
-        "decontam_surgery": q_decontam_surgery,
-        # -- never gated: retrieval / ANN ---------------------------
-        "bm25_topk": q_bm25_topk,
-        "hybrid_topk": q_hybrid_topk,
-        "pq_topk": q_pq_topk,
-        "ivf_quantized_topk": q_ivf_quantized_topk,
-        "quantized_topk": q_quantized_topk,
-        "quantized_recall": q_quantized_recall,
-        "lsh_recall": q_lsh_recall,
-        "pq_codebooks": q_pq_codebooks,
-        # -- never gated: dedup machinery ---------------------------
-        "cdc_dedup": q_cdc_dedup,
-        "snapshot_dedup": q_snapshot_dedup,
-        "edit_verify": q_edit_verify,
-        "containment_pairs": q_containment_pairs,
-        "prefix_join": q_prefix_join,
-        "winnow_fp": q_winnow_fp,
-        "winnow_pairs": q_winnow_pairs,
-        "sentence_chunks": q_sentence_chunks,
-        # -- never gated: sketches ----------------------------------
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "hll_distinct": q_hll_distinct,
-        "bloom_decontam": q_bloom_decontam,
-        "quantile_sketch": q_quantile_sketch,
-        # -- never gated: events ------------------------------------
-        "sessionize": q_sessionize,
-        "asof_purchase_click": q_asof_purchase_click,
-        # -- never gated: mixture -----------------------------------
-        "temperature_mixture": q_temperature_mixture,
-        "epoch_plan": q_epoch_plan,
-        "materialize_mixture": q_materialize_mixture,
-        "mixture_summary": q_mixture_summary,
-        # -- never gated: remainder ---------------------------------
-        "card_pii": q_card_pii,
-        "source_reputation": q_source_reputation,
-        "perceptual_hash": q_perceptual_hash,
+        # -- never driver-gated: past the round-5 rotation front -----
         "phash_pairs": q_phash_pairs,
         "contrastive_pairs": q_contrastive_pairs,
         "pack_stream": q_pack_stream,
@@ -10696,7 +10291,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "preference_pairs": q_preference_pairs,
         "paragraph_lang": q_paragraph_lang,
         "lang_mixedness": q_lang_mixedness,
-        "shipping_priority": q_shipping_priority,
         "pca_component": q_pca_component,
         "pca_scores": q_pca_scores,
         "random_projection": q_random_projection,
@@ -10708,7 +10302,71 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bitext_mine": q_bitext_mine,
         "wordpiece_merges": q_wordpiece_merges,
         "wordpiece_segment": q_wordpiece_segment,
-        # -- previously driver-gated tail (green in r1-r4) ----------
+        # -- never driver-gated: round-5 web-source tier ------------
+        "registrable_domains": q_registrable_domains,
+        "page_meta": q_page_meta,
+        "frontier_schedule": q_frontier_schedule,
+        "canonical_dedup": q_canonical_dedup,
+        "recrawl_schedule": q_recrawl_schedule,
+        "sitemap_entries": q_sitemap_entries,
+        "hreflang_pairs": q_hreflang_pairs,
+        "trustrank": q_trustrank,
+        "dup_histogram": q_dup_histogram,
+        "crawl_depth": q_crawl_depth,
+        "html_tables": q_html_tables,
+        "outlink_profile": q_outlink_profile,
+        "heading_outline": q_heading_outline,
+        "url_features": q_url_features,
+        "feed_items": q_feed_items,
+        # -- driver-gated in rounds 1-5 (all green) -----------------
+        "pdf_images": q_pdf_images,
+        "arabic_tables": q_arabic_tables,
+        "failed_docs_poisoned": q_failed_docs_poisoned,
+        "summary_poisoned": q_summary_poisoned,
+        "kmeans_centroids": q_kmeans_centroids,
+        "segment_audio": q_segment_audio,
+        "semdedup": q_semdedup,
+        "gopher_rules": q_gopher_rules,
+        "c4_line_filter": q_c4_line_filter,
+        "remove_repeated": q_remove_repeated,
+        "dsir_select": q_dsir_select,
+        "quality_chain": q_quality_chain,
+        "leakage_split": q_leakage_split,
+        "ccnet_buckets": q_ccnet_buckets,
+        "fix_mojibake": q_fix_mojibake,
+        "sentence_dedup": q_sentence_dedup,
+        "toxicity_gate": q_toxicity_gate,
+        "readability": q_readability,
+        "keep_best": q_keep_best,
+        "soft_dedup": q_soft_dedup,
+        "decontam_surgery": q_decontam_surgery,
+        "bm25_topk": q_bm25_topk,
+        "hybrid_topk": q_hybrid_topk,
+        "pq_topk": q_pq_topk,
+        "ivf_quantized_topk": q_ivf_quantized_topk,
+        "quantized_topk": q_quantized_topk,
+        "quantized_recall": q_quantized_recall,
+        "lsh_recall": q_lsh_recall,
+        "pq_codebooks": q_pq_codebooks,
+        "cdc_dedup": q_cdc_dedup,
+        "snapshot_dedup": q_snapshot_dedup,
+        "edit_verify": q_edit_verify,
+        "containment_pairs": q_containment_pairs,
+        "prefix_join": q_prefix_join,
+        "winnow_fp": q_winnow_fp,
+        "winnow_pairs": q_winnow_pairs,
+        "sentence_chunks": q_sentence_chunks,
+        "cms_heavy_hitters": q_cms_heavy_hitters,
+        "hll_distinct": q_hll_distinct,
+        "bloom_decontam": q_bloom_decontam,
+        "quantile_sketch": q_quantile_sketch,
+        "temperature_mixture": q_temperature_mixture,
+        "epoch_plan": q_epoch_plan,
+        "materialize_mixture": q_materialize_mixture,
+        "mixture_summary": q_mixture_summary,
+        "card_pii": q_card_pii,
+        "source_reputation": q_source_reputation,
+        "perceptual_hash": q_perceptual_hash,
         "kn_lm": q_kn_lm,
         "kn_score": q_kn_score,
         "phrase_topk": q_phrase_topk,
@@ -10728,11 +10386,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "annotator_kappa": q_annotator_kappa,
         "bradley_terry": q_bradley_terry,
         "verbosity_bias": q_verbosity_bias,
-        "funnel": q_funnel,
-        "cohort_retention": q_cohort_retention,
         "jm_lambda": q_jm_lambda,
-        "ab_test": q_ab_test,
-        "event_transitions": q_event_transitions,
         "label_propagation": q_label_propagation,
         "hll_overlap": q_hll_overlap,
         "term_drift": q_term_drift,
@@ -10772,9 +10426,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "arabic_normalized": q_arabic_normalized,
         "sheet_structure": q_sheet_structure,
         "doc_metadata": q_doc_metadata,
-        "orders_report": q_orders_report,
-        "lineitem_pricing": q_lineitem_pricing,
-        "events_report": q_events_report,
         "extract_content": q_extract_content,
         "extract_content_arrow": q_extract_content_arrow,
         "single_doc": q_single_doc,
@@ -10825,22 +10476,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "simhash_pairs": q_simhash_pairs,
         "cosine_topk": q_cosine_topk,
         "lsh_cosine_topk": q_lsh_cosine_topk,
-        # -- round-5 web-source tier (added after the rotation freeze) ----
-        "registrable_domains": q_registrable_domains,
-        "page_meta": q_page_meta,
-        "frontier_schedule": q_frontier_schedule,
-        "canonical_dedup": q_canonical_dedup,
-        "recrawl_schedule": q_recrawl_schedule,
-        "sitemap_entries": q_sitemap_entries,
-        "hreflang_pairs": q_hreflang_pairs,
-        "trustrank": q_trustrank,
-        "dup_histogram": q_dup_histogram,
-        "crawl_depth": q_crawl_depth,
-        "html_tables": q_html_tables,
-        "outlink_profile": q_outlink_profile,
-        "heading_outline": q_heading_outline,
-        "url_features": q_url_features,
-        "feed_items": q_feed_items,
     }
 
 
@@ -10865,11 +10500,7 @@ def oracle_sql() -> dict[str, str]:
         "annotator_kappa": SQL_ANNOTATOR_KAPPA,
         "bradley_terry": SQL_BRADLEY_TERRY,
         "verbosity_bias": SQL_VERBOSITY_BIAS,
-        "funnel": SQL_FUNNEL,
-        "cohort_retention": SQL_COHORT_RETENTION,
         "jm_lambda": SQL_JM_LAMBDA,
-        "ab_test": SQL_AB_TEST,
-        "event_transitions": SQL_EVENT_TRANSITIONS,
         "label_propagation": SQL_LABEL_PROPAGATION,
         "hll_overlap": SQL_HLL_OVERLAP,
         "term_drift": SQL_TERM_DRIFT,
@@ -10925,8 +10556,6 @@ def oracle_sql() -> dict[str, str]:
         "cms_heavy_hitters": SQL_CMS_HEAVY_HITTERS,
         "hll_distinct": SQL_HLL_DISTINCT,
         "bloom_decontam": SQL_BLOOM_DECONTAM,
-        "sessionize": SQL_SESSIONIZE,
-        "asof_purchase_click": SQL_ASOF_PURCHASE_CLICK,
         "caption_candidates": SQL_CAPTION_CANDIDATES,
         "lsh_recall": SQL_LSH_RECALL,
         "ivf_quantized_topk": SQL_IVF_QUANTIZED,
@@ -11006,7 +10635,6 @@ def oracle_sql() -> dict[str, str]:
         "preference_pairs": SQL_PREFERENCE_PAIRS,
         "paragraph_lang": SQL_PARAGRAPH_LANG,
         "lang_mixedness": SQL_LANG_MIXEDNESS,
-        "shipping_priority": SQL_SHIPPING_PRIORITY,
         "pca_component": SQL_PCA_COMPONENT,
         "pca_scores": SQL_PCA_SCORES,
         "random_projection": SQL_RANDOM_PROJECTION,
@@ -11040,9 +10668,6 @@ def oracle_sql() -> dict[str, str]:
         "arabic_normalized": SQL_ARABIC_NORMALIZED,
         "sheet_structure": SQL_SHEET_STRUCTURE,
         "doc_metadata": SQL_DOC_METADATA,
-        "orders_report": SQL_ORDERS,
-        "lineitem_pricing": SQL_LINEITEM_PRICING,
-        "events_report": SQL_EVENTS,
         "registrable_domains": _sql_registrable_domains(),
         "page_meta": _sql_page_meta(),
         "frontier_schedule": SQL_FRONTIER_SCHEDULE,

@@ -450,16 +450,6 @@ def main() -> None:
           lambda: BLM.bloom_decontaminate(
               docs, SAM.hash_sample(docs, 0.1, salt="contam"), n=3)
           .agg(F.sum("n_matched")).collect())
-    from rag_document_parser_spark.operators import events as EV
-    evts = spark.read.parquet(f"{SF_DIR}/events.parquet")
-    timed_reps("sessionize",
-          lambda: EV.session_stats(EV.sessionize(evts))
-          .agg(F.sum("n_events"), F.max("duration_s")).collect())
-    timed_reps("asof_join",
-          lambda: EV.asof_join(
-              evts.where(F.col("event_type") == "purchase"),
-              evts.where(F.col("event_type") == "click"))
-          .agg(F.sum("gap_us")).collect())
     timed_reps("weighted_sample",
           lambda: SAM.weighted_sample(
               docs, k=100, weight_col="n_chars", salt="bw").count())

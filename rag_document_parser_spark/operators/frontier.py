@@ -20,7 +20,7 @@ Semantics (engine-exact, integer-only):
    polite fetch time relative to the host's first fetch.
 
 Scale shape: one window per host (state bounded by the host's own
-queue, the ``events.py`` per-entity discipline) and one TakeOrdered
+queue, so the straggler is the longest host queue) and one TakeOrdered
 for the budget — never a global sort materialized. A pathological
 host queue (link farm emitting 10^9 URLs) is refused LOUDLY before
 the window via a map-side-combinable count + in-plan raise
@@ -30,9 +30,16 @@ upstream with ``per_host_cap``-sized sampling instead.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 __all__ = ["frontier_schedule"]
+
+
+def _ts_us(ts_col: str) -> Column:
+    # cast through TIMESTAMP: the parquet column arrives TIMESTAMP_NTZ
+    # and unix_micros wants an instant; the session TZ is UTC so the
+    # micros equal DuckDB's epoch_us of the same parquet value
+    return F.unix_micros(F.col(ts_col).cast("timestamp"))
 
 
 def frontier_schedule(df: DataFrame, id_col: str = "url_id",
@@ -100,8 +107,6 @@ def recrawl_schedule(df: DataFrame, id_col: str = "url_id",
     joins, no per-entity history buffering; a URL fetched 10^6 times
     still costs one partial-agg row per task.
     """
-    from rag_document_parser_spark.operators.events import _ts_us
-
     lo = int(min_interval_s) * 1_000_000
     hi = int(max_interval_s) * 1_000_000
     per = (df.select(F.col(id_col).alias("url_id"),

@@ -232,44 +232,6 @@ def stream_curate(
     return _append(final, output_dir)
 
 
-def stream_windowed_event_counts(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    window_duration: str = "1 hour",
-    watermark: str = "2 hours",
-):
-    """Watermarked tumbling-window aggregation over a growing events table.
-
-    The late-data pattern the reference lacks entirely: events stream in
-    by file, are bucketed into event-time windows, and rows later than
-    ``watermark`` behind the max seen event time are dropped while closed
-    windows are finalized to the sink (append mode only emits a window
-    once the watermark passes it — exactly-once per window). Schema:
-    (event_id long, ts timestamp, user_id long, event_type string,
-    value double) — the driver ``events`` table shape.
-    """
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-    ])
-    stream = spark.readStream.schema(schema).parquet(input_dir)
-    agg = (
-        stream.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"),
-             F.sum(F.floor(F.col("value") * 100)).cast("long")
-             .alias("sum_value_cents"))
-        .select(F.col("w.start").alias("window_start"),
-                F.col("w.end").alias("window_end"),
-                "event_type", "n_events", "sum_value_cents")
-    )
-    return _append(agg, output_dir)
-
-
 def stream_shard_progress(
     spark: SparkSession,
     input_dir: str,
@@ -392,114 +354,6 @@ def stream_token_sketch(
     toks = stream.select("lang", F.explode(words(F.col("text"))).alias("term"))
     return _publish(hll_registers(toks, group_cols=("lang",)),
                     output_dir, "registers")
-
-
-def stream_sessionize(
-    spark: SparkSession,
-    input_dir: str,
-    output_dir: str,
-    gap_s: int = 60,
-    late_s: int = 10,
-):
-    """Streaming gap-based sessionization — the live form of
-    ``operators.events.sessionize`` via ``applyInPandasWithState`` with
-    an EVENT-TIME timeout.
-
-    Each entity's open session lives in the state store as
-    ``(start_us, last_us, n_events)``. A micro-batch's events are
-    folded in event-time order: an event within ``gap_s`` of the open
-    session's last event extends it; a larger gap CLOSES the session
-    (one output row, ``closed_by='gap'``) and opens a new one. When the
-    watermark passes ``last_us + gap_s`` the open session can never be
-    extended by an admissible event again, so the event-time timeout
-    fires and emits it (``closed_by='timeout'``) — the streaming
-    guarantee the batch operator gets for free by seeing all data.
-    Late events beyond ``late_s`` are dropped by the watermark, which
-    is what makes emitted sessions FINAL (exactly-once session rows
-    across restarts via the checkpoint).
-
-    Scale shape: state is one fixed-size tuple per entity with an open
-    session — closed sessions leave the store immediately, and the
-    timeout GC bounds it to entities active within the last
-    ``gap_s + late_s``. The only shuffle keys on the entity, same as
-    the batch plan; the straggler bound (max events per entity per
-    micro-batch) and its cure (upstream per-entity capping, never
-    salting) are the batch operator's, documented there.
-    """
-    events_schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start_us", T.LongType()),
-        T.StructField("session_end_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-        T.StructField("closed_by", T.StringType()),
-    ])
-    state_schema = T.StructType([
-        T.StructField("start_us", T.LongType()),
-        T.StructField("last_us", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ])
-    gap_us = gap_s * 1_000_000
-
-    def update(key, pdfs, state):
-        skip_unchanged_zip_reloads()
-        import pandas as pd
-
-        if state.hasTimedOut:
-            st, la, n = state.get
-            state.remove()
-            yield pd.DataFrame({
-                "user_id": [key[0]], "session_start_us": [st],
-                "session_end_us": [la], "n_events": [n],
-                "closed_by": ["timeout"]})
-            return
-        ts: list[int] = []
-        for pdf in pdfs:
-            # normalize to µs regardless of the batch's datetime unit
-            ts.extend(pdf["ts"].values.astype("datetime64[us]")
-                      .astype("int64").tolist())
-        if not ts:
-            return
-        ts.sort()
-        st, la, n = state.get if state.exists else (None, None, 0)
-        closed: list[tuple[int, int, int]] = []
-        for t in ts:
-            if st is None:
-                st, la, n = t, t, 1
-            elif t - la > gap_us:
-                closed.append((st, la, n))
-                st, la, n = t, t, 1
-            else:
-                # out-of-order within the watermark merges into the
-                # open session (start may move earlier)
-                st, la, n = min(st, t), max(la, t), n + 1
-        state.update((st, la, n))
-        # timeout must sit strictly past the current watermark
-        state.setTimeoutTimestamp(
-            max(la // 1000 + gap_s * 1000,
-                state.getCurrentWatermarkMs() + 1))
-        if closed:
-            yield pd.DataFrame({
-                "user_id": [key[0]] * len(closed),
-                "session_start_us": [c[0] for c in closed],
-                "session_end_us": [c[1] for c in closed],
-                "n_events": [c[2] for c in closed],
-                "closed_by": ["gap"] * len(closed)})
-
-    stream = (spark.readStream.schema(events_schema).parquet(input_dir)
-              .withWatermark("ts", f"{late_s} seconds")
-              .select("user_id", "ts"))
-    sessions = stream.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "append",
-        GroupStateTimeout.EventTimeTimeout)
-    return _append(sessions, output_dir)
 
 
 def stream_group_mass(

@@ -7,6 +7,7 @@ so the number cannot silently drift from SURVEY.md again.
 """
 from __future__ import annotations
 
+import json
 import re
 import warnings
 from pathlib import Path
@@ -16,7 +17,7 @@ import __spark_entry__ as entry
 REPO = Path(__file__).resolve().parents[1]
 
 # Bump this deliberately (together with SURVEY.md) when adding queries.
-EXPECTED_QUERY_COUNT = 212
+EXPECTED_QUERY_COUNT = 202
 
 
 def test_query_count_pinned():
@@ -38,19 +39,17 @@ def test_every_query_is_callable_and_oracles_are_a_subset():
     assert not unknown, f"oracle_sql keys without a queries() entry: {unknown}"
 
 
-def test_round5_rotation_front_is_the_never_gated_set():
-    """The first 7 entries must be the two-round-stale seven from
-    VERDICT r4 task #1 — the driver gates the dict front."""
-    front = list(entry.queries())[:7]
-    assert front == [
-        "pdf_images",
-        "arabic_tables",
-        "failed_docs_poisoned",
-        "summary_poisoned",
-        "kmeans_centroids",
-        "segment_audio",
-        "semdedup",
-    ]
+def test_queries_lead_with_the_never_driver_gated_set():
+    """The driver gates the dict front, so every query that no
+    CORRECTNESS_r*.json round has gated must lead ``queries()``.
+    Derived from the artifacts: a new round's file folds in."""
+    gated = set()
+    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
+        gated |= set(json.loads(path.read_text(encoding="utf-8")))
+    assert gated, "no CORRECTNESS_r*.json artifact found"
+    names = list(entry.queries())
+    never = {k for k in names if k not in gated}
+    assert set(names[:len(never)]) == never
 
 
 def test_entry_compiles_without_warnings():

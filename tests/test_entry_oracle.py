@@ -5,6 +5,7 @@ oracle at sf0.001 (the driver runs the same comparison at sf0.01).
 from __future__ import annotations
 
 import os
+import subprocess
 import sys
 
 import duckdb
@@ -61,3 +62,25 @@ def test_entry_smoke(spark):
     rows = df.limit(5).collect()
     assert {"doc_id", "route", "n_spans", "content"} <= set(df.columns)
     assert len(rows) > 0
+
+
+def test_phash_pairs_plans_as_the_first_query_of_a_session(duck):
+    """The driver runs queries() in order in one fresh session, so the
+    front query must also plan when nothing ran before it: a Union of two
+    range projections made phash_pairs fail there with `key not found:
+    id#3L`. A child process gives the fresh session."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import sys; sys.path.insert(0, %r)\n"
+        "from pyspark.sql import SparkSession\n"
+        "spark = (SparkSession.builder.master('local[1]')"
+        ".config('spark.driver.memory', '512m')"
+        ".config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "import __spark_entry__ as E\n"
+        "print('rows', len(E.queries()['phash_pairs'](spark, %r)"
+        ".toPandas()))\n" % (repo, SF_DIR))
+    r = subprocess.run([sys.executable, "-c", code], capture_output=True,
+                       text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-2000:]
+    want = len(duck.sql(E.oracle_sql()["phash_pairs"]).df())
+    assert f"rows {want}\n" in r.stdout

@@ -4,8 +4,6 @@ prime partition count — the property that makes results reproducible
 across cluster sizes (the north rule's two-cluster-size criterion is
 exactly a partitioning change)."""
 
-import datetime as dt
-
 from pyspark.sql import functions as F
 
 
@@ -30,37 +28,6 @@ def test_weighted_sample_invariant(spark):
         "doc_id long, n_chars long")
     _check(lambda d: weighted_sample(d, k=20, weight_col="n_chars",
                                      salt="pi"))(df)
-
-
-def test_sessionize_invariant(spark):
-    from rag_document_parser_spark.operators.events import (
-        session_stats, sessionize)
-
-    t0 = dt.datetime(2024, 1, 1)
-    rows = [(i, t0 + dt.timedelta(seconds=(i * 97) % 7200), i % 7, "x")
-            for i in range(400)]
-    df = spark.createDataFrame(
-        rows, "event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string")
-    _check(lambda d: session_stats(sessionize(d, gap_s=300)))(df)
-
-
-def test_asof_join_invariant(spark):
-    from rag_document_parser_spark.operators.events import asof_join
-
-    t0 = dt.datetime(2024, 1, 1)
-    schema = ("event_id long, ts timestamp_ntz, user_id long, "
-              "event_type string")
-    left = spark.createDataFrame(
-        [(i, t0 + dt.timedelta(seconds=(i * 61) % 3600), i % 5, "l")
-         for i in range(150)], schema)
-    right_rows = [(500 + i, t0 + dt.timedelta(seconds=(i * 83) % 3600),
-                   i % 5, "r") for i in range(150)]
-
-    def build(l):
-        r = spark.createDataFrame(right_rows, schema)
-        return asof_join(l, r)
-    _check(build)(left)
 
 
 def test_quantized_topk_invariant(spark):

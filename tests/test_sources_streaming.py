@@ -16,7 +16,6 @@ from rag_document_parser_spark.sources import (
 from rag_document_parser_spark.streaming import (
     stream_extract,
     stream_extract_with_lineage,
-    stream_windowed_event_counts,
 )
 from rag_document_parser_spark.plans.job import extract
 
@@ -251,43 +250,6 @@ def test_stream_dedup_bounded_state_eviction(spark, tmp_path):
     assert got == ["A", "B", "C", "dupA-late"]
 
 
-def test_stream_windowed_event_counts(spark, tmp_path):
-    """Watermark + tumbling window over a file-streamed events table:
-    windows are finalized (emitted) only once the watermark passes them,
-    and a late row behind the watermark is dropped."""
-    import datetime as dt
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    base = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-    def ev(i, hour_offset, etype="click", value=1.0):
-        return (i, base + dt.timedelta(hours=hour_offset), 7, etype, value)
-
-    schema = "event_id long, ts timestamp, user_id long, event_type string, value double"
-    # batch 1: events in hours 0 and 1, plus a max-ts event at hour 6 that
-    # pushes the watermark (2h) past both earlier windows
-    b1 = [ev(1, 0.2), ev(2, 0.4), ev(3, 1.5), ev(4, 6.0)]
-    spark.createDataFrame(b1, schema).write.mode("append").parquet(in_dir)
-    q = stream_windowed_event_counts(spark, in_dir, out_dir)
-    q.awaitTermination(120)
-    got = {(r.window_start.hour, r.event_type): r.n_events
-           for r in spark.read.parquet(out_dir + "/data").collect()}
-    assert got[(0, "click")] == 2 and got[(1, "click")] == 1
-    assert (6, "click") not in got  # its window is still open
-
-    # batch 2: one LATE event in hour 0 (behind the 2h watermark → dropped)
-    # and one more at hour 9 closing the hour-6 window
-    b2 = [ev(5, 0.5), ev(6, 9.0)]
-    spark.createDataFrame(b2, schema).write.mode("append").parquet(in_dir)
-    q = stream_windowed_event_counts(spark, in_dir, out_dir)
-    q.awaitTermination(120)
-    got2 = {(r.window_start.hour, r.event_type): r.n_events
-            for r in spark.read.parquet(out_dir + "/data").collect()}
-    assert got2[(0, "click")] == 2   # late event did NOT update the window
-    assert got2[(6, "click")] == 1   # hour-6 window finalized
-
-
 def test_stream_extract_with_lineage(spark, tmp_path):
     in_dir = str(tmp_path / "in")
     out_dir = str(tmp_path / "out")
@@ -422,74 +384,6 @@ def test_stream_token_sketch_merges_across_batches(spark, tmp_path):
                              F.explode(words(F.col("text"))).alias("term")),
                 group_cols=("lang",)).collect()}
     assert got == want
-
-
-def test_stream_sessionize_gap_and_timeout(spark, tmp_path):
-    """Streaming sessionization: a within-batch idle gap closes a session
-    immediately (closed_by='gap'); an open session is finalized by the
-    event-time timeout once the watermark passes last_event + gap
-    (closed_by='timeout'); sessions still within reach stay open."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from rag_document_parser_spark.streaming import stream_sessionize
-
-    in_dir = str(tmp_path / "in")
-    out_dir = str(tmp_path / "out")
-    schema = T.StructType([
-        T.StructField("event_id", T.LongType()),
-        T.StructField("ts", T.TimestampType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("event_type", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("props", T.StringType()),
-    ])
-    t0 = dt.datetime(2026, 1, 1, 0, 0, 0)
-
-    def ev(eid, uid, seconds):
-        return (eid, t0 + dt.timedelta(seconds=seconds), uid, "click",
-                1.0, "{}")
-
-    def write_batch(rows, name):
-        spark.createDataFrame(rows, schema).coalesce(1) \
-            .write.mode("append").parquet(in_dir)
-
-    us = 1_000_000
-    t0_us = int(t0.replace(tzinfo=dt.timezone.utc).timestamp()) * us
-
-    # batch 1: user 1 — two events 30s apart, then a 2h-later event:
-    # the idle gap (> 60s) closes session 1 within the batch
-    write_batch([ev(1, 1, 0), ev(2, 1, 30), ev(3, 1, 7200)], "b1")
-    q = stream_sessionize(spark, in_dir, out_dir, gap_s=60, late_s=10)
-    q.awaitTermination(120)
-    rows = spark.read.parquet(os.path.join(out_dir, "data")).collect()
-    assert [(r.user_id, r.session_start_us, r.session_end_us, r.n_events,
-             r.closed_by) for r in rows] == \
-        [(1, t0_us, t0_us + 30 * us, 2, "gap")]
-
-    # batch 2: user 2 at t0+6h — advances the watermark past user 1's
-    # open-session timeout, but the timeout only FIRES on the next batch
-    # (watermark updates at batch end)
-    write_batch([ev(4, 2, 6 * 3600)], "b2")
-    q = stream_sessionize(spark, in_dir, out_dir, gap_s=60, late_s=10)
-    q.awaitTermination(120)
-
-    # batch 3: user 3 at t0+7h — user 1's open session (last event
-    # t0+2h) times out against the entering watermark ~t0+6h; the
-    # post-batch no-data pass advances the watermark to ~t0+7h and
-    # finalizes user 2 as well; user 3 (last event t0+7h) stays open
-    write_batch([ev(5, 3, 7 * 3600)], "b3")
-    q = stream_sessionize(spark, in_dir, out_dir, gap_s=60, late_s=10)
-    q.awaitTermination(120)
-    rows = spark.read.parquet(os.path.join(out_dir, "data")).collect()
-    got = sorted((r.user_id, r.session_start_us, r.session_end_us,
-                  r.n_events, r.closed_by) for r in rows)
-    assert (1, t0_us + 7200 * us, t0_us + 7200 * us, 1, "timeout") in got
-    assert len([g for g in got if g[0] == 1]) == 2
-    assert (2, t0_us + 6 * 3600 * us, t0_us + 6 * 3600 * us, 1,
-            "timeout") in got
-    assert not [g for g in got if g[0] == 3]  # still open
 
 
 def test_stream_group_mass_matches_batch_weights(spark, tmp_path):
