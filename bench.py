@@ -640,8 +640,6 @@ def main() -> None:
           lambda: T.language_mixedness(T.paragraph_language(mp))
           .agg(F.sum("dominant_frac_e6"), F.count("*")).collect())
     import __spark_entry__ as _E
-    timed_reps("shipping_priority",
-          lambda: _E.q_shipping_priority(spark, SF_DIR).collect())
     from rag_document_parser_spark.operators import pca as PCA
     timed_reps("pca_project",
           lambda: PCA.project_pc1(emb, PCA.power_iteration_pc1(

@@ -16,8 +16,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as E  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.001"
-TABLES = ("region nation customer supplier part orders lineitem events "
-          "documents embeddings").split()
+TABLES = "events documents embeddings".split()
 
 
 @pytest.fixture(scope="module")
