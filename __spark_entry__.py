@@ -403,13 +403,14 @@ def _extract_projection(out: DataFrame) -> DataFrame:
 
 def q_extract_content(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1/E2/E8/E10/E17/E21/E40 + L1 end-to-end."""
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     return _extract_projection(out)
 
 
 def q_extract_content_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same contract through the giant-doc chunking path."""
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=True)
+    """Same contract through extract's exchange form, the one
+    ``run_job`` uses."""
+    out = J.extract(spans_df_from_documents(spark, sf_dir))
     return _extract_projection(out)
 
 
@@ -423,7 +424,7 @@ def q_single_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
     into the corpus scan ahead of extraction."""
     docs = spans_df_from_documents(spark, sf_dir) \
         .where(F.col("doc_id").isin("d-7-0", "d-11-0", "d-42-0"))
-    out = J.extract(docs, chunk=False)
+    out = J.extract(docs, stable=True)
     return _extract_projection(out)
 
 
@@ -433,7 +434,7 @@ SQL_SINGLE_DOC = SQL_EXTRACT + \
 
 def q_route_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2/A8 report shape over extraction output."""
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     return by_route(out).select(
         "route", F.col("n_docs").cast("long").alias("n_docs"),
         F.col("success_rate").cast("double").alias("success_rate"),
@@ -452,7 +453,7 @@ def q_summary_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``wall_us`` is the kernel's measured batch time, which no oracle can
     reproduce, so the gated report counts it as 0; lineage's ``wall_ms``
     carries the measured figure."""
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False) \
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True) \
         .withColumn("wall_us", F.lit(0).cast("long"))
     return summary_report(out).select(
         F.col("total_docs").cast("long"), F.col("successful").cast("long"),
@@ -469,7 +470,7 @@ FROM extracted"""
 
 def q_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A12 validity predicate (/root/reference/models/parse_result.py:167-176)."""
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     return validity(out)
 
 
@@ -7808,7 +7809,7 @@ def q_failed_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     compared against the oracle)."""
     from rag_document_parser_spark.reporting import failed_docs
 
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     return failed_docs(out)
 
 
@@ -7828,7 +7829,7 @@ def _poisoned_out(spark: SparkSession, sf_dir: str) -> DataFrame:
         kind.alias("kind"), F.col("text").alias("text"),
         F.lit(None).cast("string").alias("media_ref"),
         F.lit(0).cast("int").alias("offset"))).alias("spans"))
-    return J.extract(df, ExtractConfig(unknown_kinds="error"), chunk=False)
+    return J.extract(df, ExtractConfig(unknown_kinds="error"), stable=True)
 
 
 def q_failed_docs_poisoned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -8086,7 +8087,7 @@ def q_pdf_images(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the doc in offset order (window bounded by spans-per-doc)."""
     from rag_document_parser_spark.semantics import RE_MEDIA_REF
 
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     sp = out.select("doc_id", F.explode("spans_clean").alias("s"))
     m = sp.where(F.col("s.kind").isin("media", "media_slide"))
     pat = RE_MEDIA_REF.strip("^$")
@@ -8130,7 +8131,7 @@ def q_content_structure(spark: SparkSession, sf_dir: str) -> DataFrame:
     OCR text (/root/reference/example_usage_reporting.py shapes)."""
     from rag_document_parser_spark.reporting import content_structure_totals
 
-    out = J.extract(spans_df_from_documents(spark, sf_dir), chunk=False)
+    out = J.extract(spans_df_from_documents(spark, sf_dir), stable=True)
     t = content_structure_totals(out)
     return t.select(F.col("total_tables").cast("long"),
                     F.col("total_media").cast("long"),
@@ -8241,7 +8242,7 @@ def q_arabic_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     staged = docs.select(F.col("doc_id").cast("string").alias("doc_id"),
                          F.array(span("table", 0),
                                  span("table_slide", 1)).alias("spans"))
-    out = J.extract(staged, ExtractConfig(arabic_tables=True), chunk=False)
+    out = J.extract(staged, ExtractConfig(arabic_tables=True), stable=True)
     return out.select(F.col("doc_id").cast("long").alias("doc_id"),
                       rendered("table").alias("pdf_render"),
                       rendered("table_slide").alias("slide_render"))

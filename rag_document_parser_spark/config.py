@@ -69,8 +69,10 @@ class ExtractConfig:
 
     # -- execution --
     n_buckets: int = 256                # salted repartition granularity
-    max_spans_per_chunk: int = 4096     # giant-doc intra-row chunking budget
-    arrow_max_records_per_batch: int = 2048
+    # the span count above which a doc counts as giant. No package code
+    # reads it (every doc is cleaned whole); perfbench reads it to pick
+    # the giant docs its checks verify.
+    max_spans_per_chunk: int = 4096
 
 
 DEFAULT_CONFIG = ExtractConfig()

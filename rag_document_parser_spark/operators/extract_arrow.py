@@ -24,10 +24,11 @@ one socket — BENCH/BASELINE.md):
 
 Scale notes (100 TB): the kernel is shape-preserving (1 row in → 1 row
 out), so it pipelines with the upstream salted exchange and the
-downstream write without extra shuffles. Batch size is bounded by
-``spark.sql.execution.arrow.maxRecordsPerBatch``; giant documents are
-pre-chunked by ``plans.job._chunk_rows`` so a single doc cannot blow
-the Arrow batch budget.
+downstream write without extra shuffles. A batch holds at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` docs, each cleaned
+whole: a giant doc costs its batch little time (9,000 spans clean in
+10-20 ms), but the worker's peak memory grows with the largest doc in a
+batch.
 """
 
 from __future__ import annotations
@@ -41,8 +42,7 @@ import pyarrow.compute as pc
 
 from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.schema import (ARROW_KERNEL_OUTPUT,
-                                              ARROW_SPAN_STRUCT,
-                                              ARROW_TITLE_KEY)
+                                              ARROW_SPAN_STRUCT)
 from rag_document_parser_spark import semantics as S
 from rag_document_parser_spark.session import skip_unchanged_zip_reloads
 
@@ -701,29 +701,14 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     order = np.lexsort((kept_idx, off_fill[kept_idx], off_null[kept_idx], par_k))
     take_idx = kept_idx[order]
 
-    # doc title = first non-null span title in reading order (E1 metadata),
-    # plus its (nl, off, pos-in-doc) key so chunk reassembly can merge
-    # per-chunk titles EXACTLY (plans.job._reassemble_big)
+    # doc title = first non-null span title in reading order (E1 metadata)
     doc_title = np.empty(n, dtype=object)
     doc_title[:] = None
-    tk_nl = np.zeros(n, dtype=np.int32)
-    tk_off = np.zeros(n, dtype=np.int32)
-    tk_pos = np.zeros(n, dtype=np.int32)
-    tk_has = np.zeros(n, dtype=bool)
     st = span_title[take_idx]
     t_valid = st != None  # noqa: E711  (elementwise on object array)
     if t_valid.any():
         u, fi = np.unique(parent[take_idx][t_valid], return_index=True)
         doc_title[u] = st[t_valid][fi]
-        win_flat = take_idx[np.flatnonzero(t_valid)[fi]]
-        lens = pc.fill_null(pc.list_value_length(spans), 0) \
-            .to_numpy(zero_copy_only=False).astype(np.int64)
-        doc_start = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(lens, out=doc_start[1:])
-        tk_has[u] = True
-        tk_nl[u] = off_null[win_flat].astype(np.int32)
-        tk_off[u] = off_fill[win_flat].astype(np.int32)
-        tk_pos[u] = (win_flat - doc_start[parent[win_flat]]).astype(np.int32)
 
     counts = np.bincount(par_k, minlength=n)
     new_offsets = np.zeros(n + 1, dtype=np.int32)
@@ -762,18 +747,12 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     if n:
         wall[0] = elapsed_us
 
-    title_key = pa.StructArray.from_arrays(
-        [pa.array(tk_nl), pa.array(tk_off), pa.array(tk_pos)],
-        names=["nl", "off", "pos"],
-        mask=pa.array(~tk_has),
-    )
     return pa.RecordBatch.from_arrays(
         [
             doc_id,
             spans_clean,
             route_arr,
             pa.array(doc_title, type=pa.string()),
-            title_key,
             pa.array(~err_doc),
             pa.array(err_msg, type=pa.string()),
             pa.array(wall),
@@ -794,7 +773,6 @@ def _error_batch(batch: pa.RecordBatch, err: str) -> pa.RecordBatch:
             empty,
             pa.array(["error"] * n, type=pa.string()),
             pa.array([None] * n, type=pa.string()),
-            pa.array([None] * n, type=ARROW_TITLE_KEY),
             pa.array(np.zeros(n, dtype=bool)),
             pa.array([err] * n, type=pa.string()),
             pa.array(np.zeros(n, dtype=np.int64)),
@@ -817,7 +795,7 @@ def make_kernel(cfg: ExtractConfig = DEFAULT_CONFIG):
 
 def extract_arrow(df, cfg: ExtractConfig = DEFAULT_CONFIG):
     """documents(doc_id, spans) -> (doc_id, spans_clean, route, title,
-    title_key, success, error, wall_us)."""
+    success, error, wall_us)."""
     from rag_document_parser_spark.schema import KERNEL_OUTPUT_SCHEMA
 
     return df.mapInArrow(make_kernel(cfg), KERNEL_OUTPUT_SCHEMA)

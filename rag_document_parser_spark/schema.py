@@ -32,19 +32,6 @@ INPUT_SCHEMA = T.StructType(
     ]
 )
 
-# Reading-order key of the span a doc's title came from:
-# (offset-is-null, offset, array position). Internal to the kernels —
-# chunk reassembly merges per-chunk titles EXACTLY by
-# (nl, off, chunk_id, pos); ``plans.job.extract`` drops it from the
-# public output.
-TITLE_KEY_STRUCT = T.StructType(
-    [
-        T.StructField("nl", T.IntegerType()),
-        T.StructField("off", T.IntegerType()),
-        T.StructField("pos", T.IntegerType()),
-    ]
-)
-
 # Kernel output (before doc_hash / bucket enrichment, which are Catalyst-side)
 KERNEL_OUTPUT_SCHEMA = T.StructType(
     [
@@ -52,16 +39,15 @@ KERNEL_OUTPUT_SCHEMA = T.StructType(
         T.StructField("spans_clean", SPAN_ARRAY),
         T.StructField("route", T.StringType()),
         T.StructField("title", T.StringType()),  # DOM <title> metadata (E1)
-        T.StructField("title_key", TITLE_KEY_STRUCT),
         T.StructField("success", T.BooleanType()),
         T.StructField("error", T.StringType()),
         T.StructField("wall_us", T.LongType()),
     ]
 )
 
-# Public extract() output: kernel columns minus the internal title_key
+# run_job's written rows: the kernel columns plus doc_hash and bucket
 OUTPUT_SCHEMA = T.StructType(
-    [f for f in KERNEL_OUTPUT_SCHEMA.fields if f.name != "title_key"]
+    KERNEL_OUTPUT_SCHEMA.fields
     + [
         T.StructField("doc_hash", T.LongType()),
         T.StructField("bucket", T.IntegerType()),
@@ -89,21 +75,12 @@ ARROW_SPAN_STRUCT = pa.struct(
     ]
 )
 
-ARROW_TITLE_KEY = pa.struct(
-    [
-        pa.field("nl", pa.int32()),
-        pa.field("off", pa.int32()),
-        pa.field("pos", pa.int32()),
-    ]
-)
-
 ARROW_KERNEL_OUTPUT = pa.schema(
     [
         pa.field("doc_id", pa.string()),
         pa.field("spans_clean", pa.list_(ARROW_SPAN_STRUCT)),
         pa.field("route", pa.string()),
         pa.field("title", pa.string()),
-        pa.field("title_key", ARROW_TITLE_KEY),
         pa.field("success", pa.bool_()),
         pa.field("error", pa.string()),
         pa.field("wall_us", pa.int64()),

@@ -12,9 +12,9 @@ Design notes:
 - ``availableNow`` trigger = "drain everything new, then stop" — the
   idiomatic incremental-batch pattern; re-invoking processes only files
   added since the last run (the checkpoint is the file ledger).
-- the kernel runs with ``chunk=False``: giant-doc chunking reassembles via
-  groupBy, which append-mode streaming disallows without watermarks, and a
-  streaming micro-batch is already size-bounded by ``maxFilesPerTrigger``.
+- the kernel runs with ``stable=True``, on the micro-batch's own
+  partitioning: no exchange, and a micro-batch is already size-bounded by
+  ``maxFilesPerTrigger``.
 - ``stream_extract_with_lineage`` uses ``foreachBatch`` to reuse the exact
   batch write path (bucket dirs + lineage rows) per micro-batch — each
   micro-batch commit is the streaming analog of one resumable batch run.
@@ -105,7 +105,7 @@ def _extract_deduped(spark: SparkSession, input_dir: str,
         .withWatermark("ingest_ts", watermark)
         .dropDuplicatesWithinWatermark(["doc_hash"])
     )
-    return extract(deduped.select("doc_id", "spans"), cfg, chunk=False)
+    return extract(deduped, cfg, stable=True)
 
 
 def stream_extract(
@@ -125,7 +125,7 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     stream = reader.parquet(input_dir)
-    return _append(extract(stream, cfg, chunk=False), output_dir)
+    return _append(extract(stream, cfg, stable=True), output_dir)
 
 
 def stream_extract_dedup_unbounded(
@@ -150,7 +150,7 @@ def stream_extract_dedup_unbounded(
     semantics.
     """
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
-    out = extract(stream, cfg, chunk=False)
+    out = extract(stream, cfg, stable=True)
     deduped = (
         out.withColumn(
             "doc_hash",
@@ -323,7 +323,7 @@ def stream_extract_with_lineage(
             out.unpersist()
 
     stream = spark.readStream.schema(INPUT_SCHEMA).parquet(input_dir)
-    out = extract(stream, cfg, chunk=False)
+    out = extract(stream, cfg, stable=True)
     return _start(out.writeStream.foreachBatch(commit_batch), output_dir)
 
 

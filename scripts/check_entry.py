@@ -46,6 +46,8 @@ def main():
              .config("spark.sql.shuffle.partitions", "8")
              .config("spark.driver.memory", "8g")
              .config("spark.ui.enabled", "false")
+             # no \r progress bar interleaved with the PASS/FAIL lines
+             .config("spark.ui.showConsoleProgress", "false")
              .appName("check_entry").getOrCreate())
     con = duckdb.connect()
     for t in TABLES:

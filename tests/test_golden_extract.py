@@ -10,7 +10,7 @@ import pytest
 
 from rag_document_parser_spark.config import DEFAULT_CONFIG, ExtractConfig
 from rag_document_parser_spark.corpus import fixture_df, generate_fixture_docs
-from rag_document_parser_spark.operators import extract_arrow
+from rag_document_parser_spark.operators.extract_arrow import extract_arrow
 from rag_document_parser_spark.semantics import clean_doc
 
 N_DOCS = 250

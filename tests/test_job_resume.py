@@ -1,21 +1,17 @@
-"""Job-level tests: checkpoint resume, lineage integrity, giant-doc chunking."""
+"""Job-level tests: checkpoint resume, lineage integrity, giant docs."""
 
 from __future__ import annotations
 
-import pytest
+import os
+
 from pyspark.sql import functions as F
 
 from rag_document_parser_spark.config import ExtractConfig
 from rag_document_parser_spark.corpus import fixture_df, generate_fixture_docs
-from rag_document_parser_spark.plans.job import (
-    _chunk_rows,
-    extract,
-    read_lineage,
-    run_job,
-)
+from rag_document_parser_spark.plans.job import extract, read_lineage, run_job
 from rag_document_parser_spark.semantics import clean_doc
 
-CFG = ExtractConfig(n_buckets=16, max_spans_per_chunk=512)
+CFG = ExtractConfig(n_buckets=16)
 
 
 def _reread(spark, out):
@@ -150,7 +146,7 @@ def test_run_job_spark_job_count(spark, tmp_path):
         "resume": jobs("resume", "b"),
         "noop": jobs("noop", "b"),
     }
-    assert got == {"fresh": 6, "crash": 8, "resume": 7, "noop": 4}
+    assert got == {"fresh": 4, "crash": 6, "resume": 5, "noop": 3}
 
 
 def test_lineage_checksum_matches_recompute(spark, tmp_path):
@@ -173,22 +169,10 @@ def test_lineage_checksum_matches_recompute(spark, tmp_path):
     assert joined.count() == lineage.count()
 
 
-def test_chunking_splits_and_reassembles_giant_doc(spark):
-    giant = 5000  # ~10x chunk budget
+def test_giant_doc_matches_clean_doc(spark):
+    giant = 5000
     df = fixture_df(spark, seed=42, n_docs=30, giant_doc_spans=giant)
-
-    # the chunk path extract runs: over-cap rows only, one row per
-    # span-slice tagged "<doc_id><SOH><chunk>/<n>"
-    big = df.where(F.size("spans") > CFG.max_spans_per_chunk)
-    chunked = _chunk_rows(big, CFG.max_spans_per_chunk)
-    giant_chunks = chunked.where(
-        F.col("doc_id").rlike("^doc-giant\x01[0-9]+/[0-9]+$"))
-    n = giant_chunks.count()
-    assert n == -(-giant // CFG.max_spans_per_chunk)  # ceil
-    assert giant_chunks.agg(F.sum(F.size("spans"))).collect()[0][0] == giant
-
-    out = extract(df, CFG, chunk=True)
-    row = out.where(F.col("doc_id") == "doc-giant").collect()[0]
+    row = extract(df, CFG).where(F.col("doc_id") == "doc-giant").collect()[0]
     docs = {d["doc_id"]: d for d in
             generate_fixture_docs(seed=42, n_docs=30, giant_doc_spans=giant)}
     expected, _, _, _, _ = clean_doc(docs["doc-giant"]["spans"], CFG)
@@ -198,35 +182,36 @@ def test_chunking_splits_and_reassembles_giant_doc(spark):
     assert got == exp
 
 
-def test_chunked_extract_matches_unchunked_everywhere(spark):
-    df = fixture_df(spark, seed=99, n_docs=80)
-    cfg = ExtractConfig(max_spans_per_chunk=4)  # force chunking of normal docs
-    a = {r["doc_id"]: ([tuple(s) for s in r["spans_clean"]], r["route"],
-                       r["title"], r["success"])
-         for r in extract(df, cfg, chunk=True).collect()}
-    b = {r["doc_id"]: ([tuple(s) for s in r["spans_clean"]], r["route"],
-                       r["title"], r["success"])
-         for r in extract(df, cfg, chunk=False).collect()}
-    assert a == b
+def test_fresh_run_with_giant_doc_writes_one_file_per_bucket(spark, tmp_path):
+    """The job is one narrow pipeline behind the bucket exchange, so each
+    bucket dir is written by exactly one task, the giant doc's too."""
+    out = str(tmp_path / "job")
+    df = fixture_df(spark, seed=42, n_docs=120, giant_doc_spans=5000)
+    r = run_job(spark, df, out, CFG, resume=False, run_id="fresh")
+    assert r["docs_committed"] == 121
+    data = os.path.join(out, "data")
+    files = {d: len([f for f in os.listdir(os.path.join(data, d))
+                     if f.endswith(".parquet")])
+             for d in os.listdir(data) if d.startswith("bucket=")}
+    assert len(files) == r["buckets_total_committed"]
+    assert set(files.values()) == {1}, files
 
 
 def test_chunked_tie_breaks_and_title_are_exact(spark):
-    """Duplicate offsets straddling chunk boundaries must keep the
-    original-array-position tie-break, and the doc title must be the
-    first titled kept span in READING order even when chunk order
-    disagrees (titled spans' offsets shuffled across chunks)."""
+    """Duplicate offsets must keep the original-array-position tie-break,
+    and the doc title must be the first titled kept span in READING
+    order even when array order disagrees."""
     html_a = "<html><head><title>zeta last</title></head><body><p>late block body text</p></body></html>"
     html_b = "<html><head><title>alpha first</title></head><body><p>early block body text</p></body></html>"
     rows = [
-        # 10 spans all at offset=5: with max_spans_per_chunk=4 they
-        # straddle three chunks; order must stay 0..9 (array position)
+        # 10 spans all at offset=5: order must stay 0..9 (array position)
         ("ties", [("text", f"tie {j}", None, 5) for j in range(10)]),
-        # titled html spans: chunk 0 holds the HIGH offset title, chunk 1+
-        # the LOW one — chunk-order title selection would pick 'zeta'
+        # titled html spans: the HIGH offset title comes first in the
+        # array, the LOW one last — array-order selection would pick 'zeta'
         ("titles", [("html", html_a, None, 9)]
          + [("text", f"filler {j}", None, 10 + j) for j in range(4)]
          + [("html", html_b, None, 1)]),
-        # duplicate-offset titled spans across chunks: position decides
+        # duplicate-offset titled spans: position decides
         ("titles-tied", [("html", html_a, None, 3)]
          + [("text", f"f{j}", None, 0) for j in range(4)]
          + [("html", html_b, None, 3)]),
@@ -234,44 +219,36 @@ def test_chunked_tie_breaks_and_title_are_exact(spark):
     df = spark.createDataFrame(rows, schema="doc_id string, spans "
                                "array<struct<kind:string,text:string,"
                                "media_ref:string,offset:int>>")
-    cfg = ExtractConfig(max_spans_per_chunk=4, normalize_unicode=False,
-                        flatten_json=False)
-    got = {r["doc_id"]: r for r in extract(df, cfg, chunk=True).collect()}
+    cfg = ExtractConfig(normalize_unicode=False, flatten_json=False)
+    got = {r["doc_id"]: r for r in extract(df, cfg).collect()}
     texts = [s["text"] for s in got["ties"]["spans_clean"]]
     assert texts == [f"tie {j}" for j in range(10)]
     assert got["titles"]["title"] == "alpha first"
     # offset tie at 3: html_a sits at array position 0 → wins
     assert got["titles-tied"]["title"] == "zeta last"
-    unchunked = {r["doc_id"]: r for r in
-                 extract(df, cfg, chunk=False).collect()}
-    for d in got:
-        assert got[d]["title"] == unchunked[d]["title"], d
-        assert [tuple(s) for s in got[d]["spans_clean"]] == \
-            [tuple(s) for s in unchunked[d]["spans_clean"]], d
 
 
 def test_chunked_extract_single_scan_plan(spark):
-    """The chunk path must scan its input exactly once: chunk rows are
-    produced filter-free and both branches read ONE materialized
-    protective exchange (ReusedExchange), so a non-deterministic input
-    plan cannot lose or duplicate docs between branches."""
+    """extract scans its input once, behind at most one exchange (none
+    with ``stable=True``)."""
     df = fixture_df(spark, seed=7, n_docs=40)
-    cfg = ExtractConfig(max_spans_per_chunk=4)
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = extract(df, cfg, chunk=True) \
-            ._jdf.queryExecution().executedPlan().toString()
+        plans = [extract(df, CFG, stable=s)
+                 ._jdf.queryExecution().executedPlan().toString()
+                 for s in (False, True)]
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
-    assert plan.count("Scan ExistingRDD") + plan.count("FileScan") == 1
-    assert "ReusedExchange" in plan
+    for plan in plans:
+        assert plan.count("Scan ExistingRDD") + plan.count("FileScan") == 1
+    assert plans[0].count("Exchange") <= 1
+    assert "Exchange" not in plans[1]
 
 
 def test_chunked_extract_nondeterministic_input_exactly_once(spark):
-    """A genuinely non-deterministic input plan (rand-sized span arrays
-    straddling the chunk threshold) still processes every doc exactly
-    once — the old two-scan design could drop or duplicate docs whose
-    size flipped between scans."""
+    """A genuinely non-deterministic input plan (rand-sized span arrays)
+    still processes every doc exactly once: the exchange writes its
+    shuffle files once, and the kernel reads each row once."""
     base = spark.range(120)
     size = (F.floor(F.rand() * 10) + 1).cast("int")  # 1..10, unseeded
     spans = F.transform(
@@ -283,8 +260,7 @@ def test_chunked_extract_nondeterministic_input_exactly_once(spark):
             i.cast("int").alias("offset")))
     df = base.select(F.concat(F.lit("d"), F.col("id").cast("string"))
                      .alias("doc_id"), spans.alias("spans"))
-    cfg = ExtractConfig(max_spans_per_chunk=4)
-    out = extract(df, cfg, chunk=True).collect()
+    out = extract(df, CFG).collect()
     ids = [r["doc_id"] for r in out]
     assert len(ids) == 120
     assert len(set(ids)) == 120
@@ -320,7 +296,6 @@ def test_pre_bucketed_job_matches_standard(spark, tmp_path):
     assert la == lb
     # and the pre-bucketed plan has no exchange after the span synthesis:
     # every bucket directory is written by a single aligned task
-    import os
     buckets = [d for d in os.listdir(f"{b_dir}/data")
                if d.startswith("bucket=")]
     n_files = [len([f for f in os.listdir(f"{b_dir}/data/{d}")

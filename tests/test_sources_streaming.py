@@ -103,7 +103,7 @@ def test_json_results_sink_roundtrip(spark, tmp_path):
     same doc set and span payloads."""
     from rag_document_parser_spark.sources import write_json_results
 
-    out = extract(fixture_df(spark, seed=31, n_docs=40), chunk=False)
+    out = extract(fixture_df(spark, seed=31, n_docs=40), stable=True)
     path = str(tmp_path / "results")
     write_json_results(out.select("doc_id", "route", "success",
                                   F.to_json("spans_clean").alias("spans_json")),
@@ -126,7 +126,7 @@ def test_csv_table_export(spark, tmp_path):
     from rag_document_parser_spark.schema import INPUT_SCHEMA
 
     out = extract(spark.createDataFrame(docs, schema=INPUT_SCHEMA),
-                  chunk=False)
+                  stable=True)
     path = str(tmp_path / "tables")
     export_tables_csv(out, path)
     back = spark.read.option("multiLine", "true").csv(path)
@@ -159,7 +159,7 @@ def test_stream_extract_incremental(spark, tmp_path):
 
     # streamed output == batch output for the same input
     batch = {r.doc_id: [tuple(s) for s in r.spans_clean]
-             for r in extract(all_docs, chunk=False).collect()}
+             for r in extract(all_docs, stable=True).collect()}
     streamed = {r.doc_id: [tuple(s) for s in r.spans_clean]
                 for r in got2.collect()}
     assert batch == streamed
