@@ -45,6 +45,18 @@ REPS = int(os.environ.get("BENCH_REPS", "5"))
 QREPS = int(os.environ.get("BENCH_QREPS", "3"))
 
 
+def heap_mb() -> int:
+    """A quarter of the available RAM, between 1 GiB and the 16 GiB the
+    round-5 machine ran with: a pinned heap larger than the box fails at
+    start-up, and the Python workers need the rest. Every result line
+    records it, since timings move with the heap."""
+    with open("/proc/meminfo") as f:
+        for line in f:
+            if line.startswith("MemAvailable:"):
+                return max(1024, min(16384, int(line.split()[1]) // 4096))
+    raise RuntimeError("MemAvailable missing from /proc/meminfo")
+
+
 def main() -> None:
     from pyspark.sql import SparkSession, functions as F
 
@@ -56,13 +68,15 @@ def main() -> None:
     from rag_document_parser_spark.operators import textstats as T
     from rag_document_parser_spark.plans import job as J
 
+    heap = heap_mb()
     spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .config("spark.sql.shuffle.partitions", str(max(CPUS, 8)))
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", f"{heap}m")
         # pinned + pre-touched heap: a growable heap causes kernel-time
         # storms (page zeroing) with many concurrent tasks → 10x variance
-        .config("spark.driver.extraJavaOptions", "-Xms16g -XX:+AlwaysPreTouch")
+        .config("spark.driver.extraJavaOptions",
+                f"-Xms{heap}m -XX:+AlwaysPreTouch")
         .config("spark.sql.adaptive.enabled", "true")
         # shuffle/spill files on tmpfs: the sandbox's one virtio disk is a
         # local artifact that a real cluster's NVMe/disaggregated shuffle
@@ -101,7 +115,7 @@ def main() -> None:
         A gc.collect() between queries releases py4j DataFrame refs so
         the ContextCleaner can drop localCheckpoint blocks — otherwise
         every checkpointing query (clusters, bpe, semdedup, ivf) leaves
-        blocks pinned in the shared 16g heap and later queries pay the
+        blocks pinned in the shared driver heap and later queries pay the
         eviction pressure."""
         import gc
 
@@ -176,7 +190,7 @@ def main() -> None:
             "value_median": docs_per_sec_median,
             "extract_reps": extract_stats,
             "unit": "docs/sec", "queries": timings, "sf": SF_DIR,
-            "cores": CPUS, "extract_docs": n_docs,
+            "cores": CPUS, "heap_mb": heap, "extract_docs": n_docs,
             "total_sec": round(sum(timings.values()), 3),
         }))
         spark.stop()
@@ -722,6 +736,7 @@ def main() -> None:
         "query_reps": rep_detail,
         "sf": SF_DIR,
         "cores": CPUS,
+        "heap_mb": heap,
         "extract_docs": n_docs,
         "total_sec": total,
     }))

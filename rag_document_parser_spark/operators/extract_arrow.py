@@ -13,10 +13,12 @@ normalization of the non-ASCII row subset (one C-level call per batch).
 Memory-bandwidth discipline (the binding resource when many cores share
 one socket — BENCH/BASELINE.md):
 
-- span text stays an ARROW array end-to-end: every route computes on a
-  if_else-blanked copy (non-route rows cost nothing downstream), the
-  routes merge in ONE ``pc.case_when`` pass, and the final reorder is a
-  single ``take`` — text never round-trips through Python objects;
+- span text stays an ARROW array end-to-end: every route ``take``s its
+  own spans and runs its passes on that compact array, so a pass costs
+  what its route holds, not the whole batch; the route outputs follow
+  the batch's text in one concatenation, and the reading-order ``take``
+  at reassembly picks each span's cleaned text from it — text never
+  round-trips through Python objects;
 - decompose (script/style/comment/head) is ONE fused left-to-right
   regex pass (semantics.RE_HTML_DECOMPOSE), not three;
 - expensive replaces are probe-gated (``_gated_pass``): a read-only
@@ -26,9 +28,10 @@ Scale notes (100 TB): the kernel is shape-preserving (1 row in → 1 row
 out), so it pipelines with the upstream salted exchange and the
 downstream write without extra shuffles. A batch holds at most
 ``spark.sql.execution.arrow.maxRecordsPerBatch`` docs, each cleaned
-whole: a giant doc costs its batch little time (9,000 spans clean in
-10-20 ms), but the worker's peak memory grows with the largest doc in a
-batch.
+whole. Since each route pays only for its own spans, a giant doc adds
+to its batch about what it costs alone (a 9,000-span pdf doc: ~10 ms,
+against ~70 ms when every route still swept the whole batch), but the
+worker's peak memory grows with the largest doc in a batch.
 """
 
 from __future__ import annotations
@@ -50,6 +53,9 @@ _KIND_CLASS_BIT = {
     "html": 1, "pdf": 2, "text": 4, "media": 8, "doc": 16, "other": 32,
 }
 _BIT_NAME = {1: "html", 2: "pdf", 4: "text", 8: "media", 16: "doc", 32: "other"}
+# every known span kind, coded by position (pc.index_in: one pass/batch)
+_KINDS = pa.array(list(S.KIND_CLASS))
+_KIND_CODE = {k: i for i, k in enumerate(S.KIND_CLASS)}
 
 # pc.extract_regex needs a named group; same pattern as semantics.RE_TITLE
 _RE_TITLE_NAMED = S.RE_TITLE.replace("(.*?)", "(?P<t>.*?)")
@@ -288,24 +294,21 @@ def _nws_len_of_visible(vis) -> np.ndarray:
     return pc.utf8_length(t).to_numpy(zero_copy_only=False)
 
 
-def _html_dom_batch(text: pa.Array, html_pa: pa.Array,
+def _html_dom_batch(h_in: pa.Array,
                     cfg: ExtractConfig) -> tuple[pa.Array, np.ndarray]:
-    """E1 DOM html extraction over a whole Arrow string array.
+    """E1 DOM html extraction over the html spans' text (no nulls).
 
     Mirrors ``semantics.html_dom_strip`` / ``html_title``: fused
     decompose (script/style/comment/head in one scan), block
     segmentation at block-element boundaries, per-block link-density
     filtering, newline join, E8. All passes are C++ regex/list kernels
     over the flattened block array — no per-row Python. Returns
-    (cleaned_text Arrow array, title numpy object array) aligned to the
-    batch; only positions where ``html_pa`` holds are meaningful.
+    (cleaned_text Arrow array, title numpy object array) aligned to
+    ``h_in``.
     """
-    h_in = pc.if_else(html_pa, pc.fill_null(text, ""), "")
-
     # title capture (text_parser.py:159-162), gated on a <title probe
-    ti_in = pc.if_else(
-        pc.fill_null(pc.match_substring_regex(h_in, pattern="(?i)<title"),
-                     False), h_in, "")
+    ti_in = pc.if_else(pc.match_substring_regex(h_in, pattern="(?i)<title"),
+                       h_in, "")
     ti_struct = pc.extract_regex(ti_in, pattern=_RE_TITLE_NAMED)
     ti = pc.replace_substring_regex(
         _visible(pc.fill_null(ti_struct.field("t"), "")),
@@ -405,12 +408,11 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     offset = flat.field("offset")
     m = len(flat)
 
+    code = pc.fill_null(pc.index_in(kind, value_set=_KINDS), -1) \
+        .to_numpy(zero_copy_only=False)
+
     def is_kind(*ks: str) -> np.ndarray:
-        mask = np.zeros(m, dtype=bool)
-        for k in ks:
-            mask |= pc.fill_null(pc.equal(kind, k), False) \
-                .to_numpy(zero_copy_only=False)
-        return mask
+        return np.isin(code, [_KIND_CODE[k] for k in ks])
 
     html_m = is_kind("html")
     textlike_m = is_kind("text", "code")
@@ -424,8 +426,7 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     media_m = is_kind("media", "media_slide")
     hf_m = is_kind("header", "footer")
     blk_m = is_kind("slide", "sheet")
-    known_m = (html_m | textlike_m | xml_m | md_m | rtf_m | json_m | pdf_m
-               | table_m | tslide_m | media_m | hf_m | blk_m)
+    known_m = code >= 0
 
     # unknown_kinds="error": whole-doc error result for any doc carrying
     # an unrecognized kind (first such kind in array order names the
@@ -446,29 +447,31 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     keep = np.ones(m, dtype=bool)
     valid_text = np.asarray(pc.is_valid(text).to_numpy(zero_copy_only=False))
 
-    def blanked(mask: np.ndarray) -> pa.Array:
-        """text with every non-(mask & valid) row blanked — downstream
-        passes over the blanked copy only pay for the route's bytes."""
-        return pc.if_else(pa.array(mask & valid_text),
-                          pc.fill_null(text, ""), "")
-
     def nonempty(arr: pa.Array) -> np.ndarray:
         return pc.not_equal(arr, "").to_numpy(zero_copy_only=False)
 
-    # each route contributes (bool-mask, full-length Arrow array); they
-    # merge in ONE pc.case_when pass at the end
-    conds: list[np.ndarray] = []
-    cases: list[pa.Array] = []
+    # every route works on its own spans only: compact (idx, text) in,
+    # (idx, cleaned) out, so a pass costs what its route holds, not the
+    # batch. The outputs merge once, in the reassembly take below.
+    outs: list[tuple[np.ndarray, pa.Array]] = []
+
+    def route(mask: np.ndarray) -> tuple[np.ndarray, pa.Array]:
+        """The route's span rows and their text, null as ""."""
+        idx = np.flatnonzero(mask)
+        return idx, pc.fill_null(text.take(idx), "")
+
+    def emit(idx: np.ndarray, t: pa.Array) -> None:
+        outs.append((idx, t))
+        keep[idx] = valid_text[idx] & nonempty(t)
 
     # ---- html route: DOM path (E1, default) or regex fallback (E2) ----
     span_title = np.empty(m, dtype=object)
     span_title[:] = None
     if html_m.any():
+        idx, t = route(html_m)
         if cfg.html_mode == "dom":
-            t_arr, ti_np = _html_dom_batch(text, pa.array(html_m), cfg)
-            span_title[html_m] = ti_np[html_m]
+            t, span_title[idx] = _html_dom_batch(t, cfg)
         else:
-            t = blanked(html_m)
             t = pc.replace_substring_regex(t, pattern=S.RE_SCRIPT_STYLE,
                                            replacement="")
             t = pc.replace_substring_regex(t, pattern=S.RE_TAG, replacement="")
@@ -478,21 +481,17 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
                                            replacement="")
             # E8 runs after the strip (text_parser.py:99) — only NFKC can
             # still change anything once whitespace is collapsed
-            t_arr = _e8(t, cfg)
-        conds.append(html_m)
-        cases.append(t_arr)
-        keep[html_m] = valid_text[html_m] & nonempty(t_arr)[html_m]
+            t = _e8(t, cfg)
+        emit(idx, t)
 
     # ---- text/code route (E8 post-process; text_parser.py:339-362) ----
     if textlike_m.any():
-        t_arr = _e8(blanked(textlike_m), cfg)
-        conds.append(textlike_m)
-        cases.append(t_arr)
-        keep[textlike_m] = valid_text[textlike_m] & nonempty(t_arr)[textlike_m]
+        idx, t = route(textlike_m)
+        emit(idx, _e8(t, cfg))
 
     # ---- xml route (E3 + E8; text_parser.py:182-214) ----
     if xml_m.any():
-        t = blanked(xml_m)
+        idx, t = route(xml_m)
         t = _gated_pass(
             t, "<![CDATA[",
             lambda x: pc.replace_substring_regex(
@@ -504,21 +503,18 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
         t = _gated_pass(t, "&#", _decode_charrefs)
         for ent, ch in S.XML_ENTITIES:
             t = pc.replace_substring(t, pattern=ent, replacement=ch)
-        t_arr = _e8(t, cfg)
-        conds.append(xml_m)
-        cases.append(t_arr)
-        keep[xml_m] = valid_text[xml_m] & nonempty(t_arr)[xml_m]
+        emit(idx, _e8(t, cfg))
 
     # ---- markdown route (E4 + E8; text_parser.py:216-248) ----
     if md_m.any():
-        t = blanked(md_m)
+        idx, t = route(md_m)
         # fence-aware: rows WITHOUT a fence (the common case) stay in
-        # the whole-batch Arrow regex chain; rows WITH one go through
+        # the whole-route Arrow regex chain; rows WITH one go through
         # the batched-Python fence splitter (semantics.md_rules_text) —
         # the same targeted to_pylist discipline as the charref/NFKC
         # passes. A no-fence row gives identical output on both paths
         # (one segment == the plain rule chain).
-        fenced = pc.fill_null(pc.match_substring(t, pattern="```"), False)
+        fenced = pc.match_substring(t, pattern="```")
         any_fenced = pc.any(fenced).as_py()
         plain = pc.if_else(fenced, "", t) if any_fenced else t
         for pat, repl in S.MD_RULES:
@@ -529,9 +525,7 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
         # + charref + entity chain; rows without one are untouched so
         # their literal entities survive. Fenced rows are blank here
         # (the python splitter applies the same gate per segment).
-        gate = pc.fill_null(
-            pc.match_substring_regex(plain, pattern=S.RE_MD_HTML_GATE),
-            False)
+        gate = pc.match_substring_regex(plain, pattern=S.RE_MD_HTML_GATE)
         if pc.any(gate).as_py():
             sub = pc.if_else(gate, plain, "")
             sub = pc.replace_substring_regex(sub, pattern=S.RE_TAG,
@@ -549,57 +543,46 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
             t = pc.if_else(fenced, done, plain)
         else:
             t = plain
-        t_arr = _e8(t, cfg)
-        conds.append(md_m)
-        cases.append(t_arr)
-        keep[md_m] = valid_text[md_m] & nonempty(t_arr)[md_m]
+        emit(idx, _e8(t, cfg))
 
     # ---- rtf route (E27 + E8; document_parser.py:465-506) ----
     if rtf_m.any():
-        t = blanked(rtf_m)
+        idx, t = route(rtf_m)
         t = _gated_pass(t, "\\u", _decode_rtf_u)
         for pat, repl in S.RTF_RULES:
             t = pc.replace_substring_regex(t, pattern=pat, replacement=repl)
         t = _gated_pass(t, "\\'", _decode_rtf_hex)
-        t_arr = _e8(t, cfg)
-        conds.append(rtf_m)
-        cases.append(t_arr)
-        keep[rtf_m] = valid_text[rtf_m] & nonempty(t_arr)[rtf_m]
+        emit(idx, _e8(t, cfg))
 
     # ---- json route (E5 + E8; text_parser.py:250-273) ----
     # json.loads is a per-document C-library call (mirroring the
-    # reference's per-file parse), applied only to the masked rows; the
-    # E8 chain stays whole-batch Arrow.
+    # reference's per-file parse), applied only to the route's rows; the
+    # E8 chain stays Arrow.
     if json_m.any():
-        j_idx = np.flatnonzero(json_m & valid_text)
-        raw = text.take(pa.array(j_idx)).to_pylist()
+        idx = np.flatnonzero(json_m)
         vals = []
-        for v in raw:
-            flat_j = S.json_flatten(v) if cfg.flatten_json else None
+        for v in text.take(idx).to_pylist():
+            flat_j = (S.json_flatten(v)
+                      if cfg.flatten_json and v is not None else None)
             vals.append(v if flat_j is None else flat_j)
-        base = pc.fill_null(pa.nulls(m, pa.string()), "")
-        t = _scatter(base, j_idx, vals) if len(j_idx) else base
-        t_arr = _e8(t, cfg)
-        conds.append(json_m)
-        cases.append(t_arr)
-        keep[json_m] = valid_text[json_m] & nonempty(t_arr)[json_m]
+        emit(idx, _e8(pc.fill_null(pa.array(vals, type=pa.string()), ""),
+                      cfg))
 
     # ---- pdf_block route: verbatim, drop empties (pdf_parser.py:141-160) ----
     if pdf_m.any():
-        keep[pdf_m] = valid_text[pdf_m] & \
-            pc.not_equal(pc.fill_null(text, ""), "") \
-            .to_numpy(zero_copy_only=False)[pdf_m]
+        idx, t = route(pdf_m)
+        keep[idx] = valid_text[idx] & nonempty(t)
 
     # ---- table routes (E14 strict pdf accept / E30 lax slide accept,
     # row/col caps, E38 render) ----
     # list-kernel form: split rows / cells as Arrow ListArrays, cap with
     # list_slice (semantics.render_table caps, reference utils/config.py:
     # 110-111), rejoin with binary_join — all C++-vectorized, no Python
-    # per row. Non-table rows are blanked first (incl. null-text table
-    # rows: a null would become a null list and ArrowInvalid the batch).
+    # per row. The route's text has its nulls filled (a null would
+    # become a null list and ArrowInvalid the batch).
     tbl_m = table_m | tslide_m
     if tbl_m.any():
-        t_in = blanked(tbl_m)
+        idx, t_in = route(tbl_m)
         if cfg.arabic_tables:
             # E20: whole-payload normalize == per-cell normalize (the
             # substitutions are character-local, never \t or \n) — see
@@ -622,25 +605,24 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
         head = pc.list_element(piped, 0)
         rest = pc.binary_join(pc.list_slice(piped, 1, cfg.max_table_rows + 1),
                               "\n")
-        dash = pc.replace_substring_regex(head, pattern=".", replacement="-")
+        # the rule under the header: one "-" per header char
+        dash = pc.binary_repeat("-", pc.utf8_length(head))
         with_rest = pc.binary_join_element_wise(head, dash, rest, "\n")
         head_only = pc.binary_join_element_wise(head, dash, "\n")
         two_plus = n_rows >= 2
-        r_arr = pc.if_else(pa.array(two_plus), with_rest, head_only)
-        ne_in = nonempty(t_in)
-        ok = (table_m & valid_text & two_plus) | (tslide_m & ne_in)
-        conds.append(tbl_m)
-        cases.append(pc.if_else(pa.array(ok), r_arr, pa.nulls(m, pa.string())))
-        keep[tbl_m] = ok[tbl_m]
+        outs.append((idx, pc.if_else(pa.array(two_plus), with_rest,
+                                     head_only)))
+        keep[idx] = ((table_m[idx] & valid_text[idx] & two_plus)
+                     | (tslide_m[idx] & nonempty(t_in)))
 
     # ---- media route: size gate + OCR stand-in over unique refs ----
     if media_m.any():
-        md_idx = np.flatnonzero(media_m)
-        take_md = pa.array(md_idx)
-        ref_np = np.asarray(media_ref.take(take_md).to_pandas(), dtype=object)
-        kind_md = np.asarray(kind.take(take_md).to_pandas(), dtype=object)
+        idx = np.flatnonzero(media_m)
+        refs = media_ref.take(idx)
+        ref_np = np.asarray(refs.to_pandas(), dtype=object)
+        kind_md = np.asarray(kind.take(idx).to_pandas(), dtype=object)
         slug_struct = pc.extract_regex(
-            media_ref.take(take_md),
+            refs,
             pattern=S.RE_MEDIA_REF.replace(
                 "(\\d+)x(\\d+)/([A-Za-z0-9_\\-.]+)",
                 "(?P<w>\\d+)x(?P<h>\\d+)/(?P<slug>[A-Za-z0-9_\\-.]+)"))
@@ -649,47 +631,40 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
         slug_np[~pc.is_valid(slug_struct).to_numpy(zero_copy_only=False)] = \
             None
         ocr = _ocr_lookup(slug_np, kind_md, ref_np, cfg)
-        conds.append(media_m)
-        cases.append(_scatter(pa.nulls(m, pa.string()), md_idx,
-                              pa.array(ocr, type=pa.string())))
         # media spans always kept (they carry media_ref)
+        outs.append((idx, pa.array(ocr, type=pa.string())))
 
     # ---- header/footer route (E21 prefixes; document_parser.py:571-593) ----
     if hf_m.any():
-        t_in = blanked(hf_m)
-        trimmed = pc.utf8_trim_whitespace(t_in)
-        nonblank = pc.not_equal(trimmed, "").to_numpy(zero_copy_only=False)
-        is_h = is_kind("header")
-        pref = pc.if_else(pa.array(is_h), "[HEADER] ", "[FOOTER] ")
-        joined = pc.binary_join_element_wise(pref, t_in, "")
-        conds.append(hf_m)
-        cases.append(joined)
-        keep[hf_m] = nonblank[hf_m]
+        idx, t_in = route(hf_m)
+        pref = pc.if_else(pa.array(code[idx] == _KIND_CODE["header"]),
+                          "[HEADER] ", "[FOOTER] ")
+        outs.append((idx, pc.binary_join_element_wise(pref, t_in, "")))
+        keep[idx] = nonempty(pc.utf8_trim_whitespace(t_in))
 
     # ---- slide/sheet structural markers (E28/E38 prefixes) ----
     if blk_m.any():
-        t_in = blanked(blk_m)
-        trimmed = pc.utf8_trim_whitespace(t_in)
-        nonblank = pc.not_equal(trimmed, "").to_numpy(zero_copy_only=False)
-        is_slide = is_kind("slide")
-        pre = pc.if_else(pa.array(is_slide), "=== Slide ", "=== Sheet: ")
-        joined = pc.binary_join_element_wise(pre, t_in, " ===", "")
-        conds.append(blk_m)
-        cases.append(joined)
-        keep[blk_m] = nonblank[blk_m]
+        idx, t_in = route(blk_m)
+        pre = pc.if_else(pa.array(code[idx] == _KIND_CODE["slide"]),
+                         "=== Slide ", "=== Sheet: ")
+        outs.append((idx, pc.binary_join_element_wise(pre, t_in, " ===",
+                                                      "")))
+        keep[idx] = nonempty(pc.utf8_trim_whitespace(t_in))
 
     # unknown kinds: passthrough (keep=True, text untouched) — unless the
     # doc was marked an error result above, which drops ALL its spans
     if err_doc.any():
         keep &= ~err_doc[parent]
 
-    # ---- merge all routes in ONE pass (default: verbatim passthrough
-    # for pdf_block and unknown kinds) ----
-    if conds:
-        cond_struct = pc.make_struct(*[pa.array(c) for c in conds])
-        out_text_arr = pc.case_when(cond_struct, *cases, text)
-    else:
-        out_text_arr = text
+    # ---- merge: the routes' outputs follow the batch's own text (the
+    # verbatim passthrough of pdf_block and unknown kinds); src[i] is
+    # span i's cleaned text in that concatenation ----
+    src = np.arange(m, dtype=np.int64)
+    end = m
+    for idx, t in outs:
+        src[idx] = np.arange(end, end + len(idx))
+        end += len(idx)
+    out_text = pa.concat_arrays([text, *(t for _, t in outs)])
 
     # ---- reading-order sort (L1) + reassembly ----
     off_np = offset.to_numpy(zero_copy_only=False).astype("float64")  # NaN = null
@@ -718,7 +693,7 @@ def _clean_batch(batch: pa.RecordBatch, cfg: ExtractConfig) -> pa.RecordBatch:
     clean_struct = pa.StructArray.from_arrays(
         [
             kind.take(take),
-            out_text_arr.take(take),
+            out_text.take(pa.array(src[take_idx])),
             media_ref.take(take),
             offset.take(take),
         ],

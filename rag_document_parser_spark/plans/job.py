@@ -74,10 +74,11 @@ def extract(df: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     bucket-partitioned table, ``run_job(pre_bucketed=True)``), streaming
     micro-batches and small report queries.
 
-    Every doc is cleaned whole, however many spans it holds: the kernel
-    cleans a 9,000-span doc in 10-20 ms, so a giant doc stalls no task;
-    what it does raise is the Python worker's peak memory, which grows
-    with the largest doc in a batch.
+    Every doc is cleaned whole, however many spans it holds. Each kernel
+    route cleans only its own spans, so a 9,000-span doc adds to its
+    batch about the ~10 ms it takes alone, and a giant doc stalls no
+    task; what it does raise is the Python worker's peak memory, which
+    grows with the largest doc in a batch.
     """
     df = df.select("doc_id", "spans")
     if not stable:
@@ -141,6 +142,20 @@ def run_job(
         "partition_id", "doc_count").collect()
     committed = sorted({r.partition_id for r in prior})
     skipped = len(committed) if resume else 0
+
+    def summary(written=(), docs=0) -> dict:
+        # equals a re-read of the lineage: the rows committed before this
+        # run plus the rows this run appended
+        return {
+            "run_id": run_id,
+            "buckets_skipped": skipped,
+            "buckets_total_committed": len(set(committed) | set(written)),
+            "docs_committed": sum(r.doc_count for r in prior) + docs,
+        }
+
+    # a no-op resume: every bucket is committed, so no plan is built
+    if skipped and set(range(cfg.n_buckets)) <= set(committed):
+        return summary()
     keep = ~bucket.isin(committed) if skipped else None
 
     # the crash hook's filter (the first K buckets left to do) implies the
@@ -203,11 +218,4 @@ def run_job(
             .write.mode("append").parquet(os.path.join(out_dir, "lineage"))
         docs = appended.get["docs"]
 
-    # the summary equals a re-read of the lineage: the rows committed
-    # before this run plus the rows this run appended
-    return {
-        "run_id": run_id,
-        "buckets_skipped": skipped,
-        "buckets_total_committed": len(set(committed) | set(written)),
-        "docs_committed": sum(r.doc_count for r in prior) + docs,
-    }
+    return summary(written, docs)

@@ -284,3 +284,82 @@ def test_markdown_inline_html_passthrough_all_engines(spark):
     assert txt["mdhtml-2"] == "a &amp; b &#65; c"           # no gate
     assert txt["mdhtml-3"] == "x var q=2; y"                # script text kept
     assert txt["mdhtml-4"] == "3 < 4 and 5 <= 6 stay"       # prose <
+
+
+# one valid payload per known kind, each a case its route rewrites
+KIND_SAMPLES = {
+    "html": "<html><head><title>T &amp; x</title></head><body><p>para one"
+            "</p><nav><a href='#'>Home</a></nav></body></html>",
+    "text": "  line one \n\n\n  line  two  ",
+    "code": "def f():\n    return 1\n",
+    "xml": "<r><![CDATA[a < b]]><x>caf&#233; &amp; y</x></r>",
+    "markdown": "# H\n\n*em* <b>b</b> &amp;\n```\n<kept> &amp;\n```\n",
+    "json": '{"a": {"b": [1, 2]}, "c": "ﬁ"}',
+    "rtf": r"{\rtf1\ansi {\fonttbl x} caf\'e9 \u8364? end\par}",
+    "pdf_block": "page  text",
+    "table": "h1\th2\na\tb",
+    "table_slide": "only\theader",
+    "media": None,
+    "media_slide": None,
+    "header": "Top",
+    "footer": "Bottom",
+    "slide": "3",
+    "sheet": "S1",
+}
+
+
+def _composed_docs():
+    """Every route kind, a null-text span of each kind, unknown kinds,
+    empty docs and one 5,000-span doc, mixed in one batch."""
+    def span(kind, text, off, ref=None):
+        return {"kind": kind, "text": text, "media_ref": ref, "offset": off}
+
+    docs = generate_fixture_docs(seed=7, n_docs=40, giant_doc_spans=5000)
+    assert max(len(d["spans"] or []) for d in docs) >= 5000
+    for kind, text in KIND_SAMPLES.items():
+        ref = "img://64x40/chart1" if kind.startswith("media") else None
+        docs.append({"doc_id": f"kind-{kind}", "spans": [
+            span(kind, None, 1, ref), span(kind, text, 0, ref),
+            span("text", "tail", None), span(kind, text, 0, ref)]})
+    docs.append({"doc_id": "all-null", "spans": [
+        span(k, None, i) for i, k in enumerate(KIND_SAMPLES)]})
+    docs.append({"doc_id": "unknown", "spans": [
+        span("custom_q", "kept verbatim", 2), span("custom_r", None, 1),
+        span("pdf_block", "page", 0)]})
+    docs.append({"doc_id": "bad-json", "spans": [span("json", "{nope", 0)]})
+    docs.append({"doc_id": "empty", "spans": []})
+    return docs
+
+
+@pytest.mark.parametrize("unknown_kinds", ["passthrough", "error"])
+def test_kernel_batch_composition(unknown_kinds):
+    """A span's output depends on its own doc only, never on what else
+    its batch holds: the whole batch equals its single-doc slices
+    concatenated, and each doc equals semantics.clean_doc. This pins the
+    gather that merges the routes' compact outputs."""
+    from rag_document_parser_spark.operators.extract_arrow import _clean_batch
+    from rag_document_parser_spark.schema import ARROW_SPAN_STRUCT
+
+    import pyarrow as pa
+
+    cfg = ExtractConfig(unknown_kinds=unknown_kinds)
+    docs = _composed_docs()
+    schema = pa.schema([("doc_id", pa.string()),
+                        ("spans", pa.list_(ARROW_SPAN_STRUCT))])
+    batch = pa.RecordBatch.from_pylist(docs, schema=schema)
+
+    def rows(out):
+        return out.drop_columns(["wall_us"]).to_pylist()
+
+    whole = rows(_clean_batch(batch, cfg))
+    alone = [r for i in range(batch.num_rows)
+             for r in rows(_clean_batch(batch.slice(i, 1), cfg))]
+    assert whole == alone
+
+    for d, got in zip(docs, whole):
+        spans, route, title, success, error = clean_doc(d["spans"], cfg)
+        assert (got["spans_clean"], got["route"], got["title"],
+                got["success"], got["error"]) == \
+            (spans, route, title, success, error), d["doc_id"]
+    assert any(r["route"] == "error" for r in whole) == \
+        (unknown_kinds == "error")

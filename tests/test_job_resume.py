@@ -130,12 +130,14 @@ def test_run_job_spark_job_count(spark, tmp_path):
     Counts observed on Spark 4.1."""
     sc = spark.sparkContext
     df = fixture_df(spark, seed=42, n_docs=120)
+    summary = {}
 
     def jobs(run_id, out, **kw):
         group = f"{tmp_path.name}-{run_id}"
         sc.setJobGroup(group, run_id)
         try:
-            run_job(spark, df, str(tmp_path / out), CFG, run_id=run_id, **kw)
+            summary[run_id] = run_job(spark, df, str(tmp_path / out), CFG,
+                                      run_id=run_id, **kw)
         finally:
             sc.setJobGroup("", "")
         return len(sc.statusTracker().getJobIdsForGroup(group))
@@ -146,7 +148,13 @@ def test_run_job_spark_job_count(spark, tmp_path):
         "resume": jobs("resume", "b"),
         "noop": jobs("noop", "b"),
     }
-    assert got == {"fresh": 4, "crash": 6, "resume": 5, "noop": 3}
+    assert got == {"fresh": 4, "crash": 6, "resume": 5, "noop": 1}
+    # the no-op resume returns before building a plan; its one job is the
+    # lineage probe, and its summary still equals a re-read of the lineage
+    noop = summary["noop"]
+    assert noop["buckets_skipped"] == CFG.n_buckets
+    assert (noop["buckets_total_committed"], noop["docs_committed"]) == \
+        _reread(spark, str(tmp_path / "b"))
 
 
 def test_lineage_checksum_matches_recompute(spark, tmp_path):
